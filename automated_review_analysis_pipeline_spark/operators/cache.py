@@ -1,24 +1,26 @@
-"""Classification cache as a join (reference C7, survey_analysis.py:145-165,
-251-273) -- the reference's single most important efficiency mechanism.
+"""Classification memo cache as a join (reference C7,
+survey_analysis.py:145-165, 251-273) -- the reference's single most
+important efficiency mechanism, and the engine's ONE implementation of it.
 
 The reference memoizes (industry, question, answer) -> (sentiment,
 category) in a JSON dict, consulted before every classifier call and
 flushed every 200 new entries. On the bundled data that's a ~7.4x
 reduction in classifier invocations (2 071 non-filler cells -> 278
-distinct). Catalyst will never dedup UDF inputs on its own, so the engine
-reproduces the effect as a plan rewrite:
+distinct). Catalyst will never dedup UDF inputs on its own, so
+:func:`classify_with_cache` reproduces the effect as a plan rewrite:
 
     distinct(keys) --left-anti join--> cache table   = misses
-    misses --classifier--> results --append--> cache (atomic parquet part)
-    df --left join (broadcast cache)--> classified columns
+    misses --classifier(question, answer)--> results --append--> cache
+    cache --left-semi join--> distinct(keys)          = every key's result
 
-Idempotence comes free: a re-run anti-joins everything away and classifies
-zero rows (the reference needed incremental flushing for crash-resume; an
-atomic append of the miss partition subsumes it).
+The classifier is the survey plans' column contract,
+``classifier(question: Column, answer: Column) -> struct<sentiment,
+category>``, applied once to the miss set with the question as a column:
+one bulk pass over the distinct texts of every question.
 
-At 100 TB the cache table is big but still tiny relative to the corpus
-(distinct answers, not rows); the final join broadcasts when it fits and
-falls back to a shuffle hash join when it does not -- both are single-pass.
+Idempotence comes free: a re-run anti-joins everything away, classifies
+zero rows and appends nothing (the reference needed incremental flushing
+for crash-resume; an atomic append of the miss partition subsumes it).
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CACHE_SCHEMA = ("industry string, question string, answer string, "
@@ -35,8 +37,8 @@ CACHE_SCHEMA = ("industry string, question string, answer string, "
 KEY_COLS = ["industry", "question", "answer"]
 VAL_COLS = ["sentiment", "category"]
 
-# classifier(distinct_keys_df) -> df with KEY_COLS + VAL_COLS
-CacheClassifier = Callable[[DataFrame], DataFrame]
+# classifier(question, answer) -> struct<sentiment string, category string>
+Classifier = Callable[[Column, Column], Column]
 
 
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
@@ -144,8 +146,8 @@ def export_json_cache(spark: SparkSession, cache_path: str,
 def compact_cache(spark: SparkSession, path: str,
                   target_file_bytes: int = 128 << 20) -> int:
     """Rewrite the append-only cache directory as few-files,
-    one-row-per-key parquet. Every run appends one miss partition set
-    (classify_with_cache / analyze_wide_cached), so a long-lived cache
+    one-row-per-key parquet. Every run with misses appends one miss
+    partition set (classify_with_cache), so a long-lived cache
     accumulates small files whose footer reads eventually dominate
     load_cache planning -- the standard small-files tax, fixed the
     standard way: periodic compaction (same sizing rule as
@@ -214,7 +216,7 @@ def compact_cache(spark: SparkSession, path: str,
 
 def classify_with_cache(
     keys: DataFrame,
-    classifier: CacheClassifier,
+    classifier: Classifier,
     spark: SparkSession,
     cache_path: str | None = None,
     max_parallelism: int | None = None,
@@ -223,6 +225,12 @@ def classify_with_cache(
     extending the cache table. Returns KEY_COLS + VAL_COLS for every input
     key. ``keys`` may contain duplicates; they are collapsed first.
 
+    With ``cache_path`` the misses are classified and appended as one
+    atomic parquet write; a run whose keys all hit writes nothing. The
+    result is read back through load_cache, so concurrently-appended
+    duplicate keys collapse to one row. Without it every distinct key
+    is classified lazily in the returned plan.
+
     ``max_parallelism`` bounds API-mode concurrency: the miss set is
     repartitioned to that many partitions before the classifier UDF, so at
     most that many concurrent request streams hit the endpoint (the
@@ -230,50 +238,18 @@ def classify_with_cache(
     rate-limit precedent -- ``max_parallelism=1`` reproduces it; None
     leaves the shuffle-parallelism default)."""
     distinct_keys = keys.select(*KEY_COLS).distinct()
-    cache = (
-        load_cache(spark, cache_path)
-        if cache_path
-        else spark.createDataFrame([], CACHE_SCHEMA)
-    )
-
-    misses = distinct_keys.join(cache, KEY_COLS, "left_anti")
+    misses = distinct_keys
+    if cache_path:
+        misses = misses.join(load_cache(spark, cache_path), KEY_COLS,
+                             "left_anti")
     if max_parallelism is not None:
         misses = misses.repartition(max_parallelism)
-    computed = classifier(misses).select(*KEY_COLS, *VAL_COLS)
-
-    if cache_path:
-        # Atomic append of the miss partition (replaces the reference's
-        # flush-every-200); re-runs then classify zero rows. Read back
-        # through load_cache so concurrently-appended duplicate keys
-        # collapse to one row before the join-back.
-        computed.write.mode("append").parquet(cache_path)
-        computed = load_cache(spark, cache_path).join(
-            distinct_keys, KEY_COLS, "left_semi")
+    computed = misses.select(
+        *KEY_COLS, classifier(F.col("question"), F.col("answer")).alias("__r")
+    ).select(*KEY_COLS, *[F.col(f"__r.{c}").alias(c) for c in VAL_COLS])
+    if not cache_path:
         return computed
-
-    return cache.join(distinct_keys, KEY_COLS, "left_semi").unionByName(computed)
-
-
-def classify_column_with_cache(
-    df: DataFrame,
-    industry: str,
-    question: str,
-    answer_col: str,
-    classifier: CacheClassifier,
-    cache_path: str | None = None,
-    max_parallelism: int | None = None,
-) -> DataFrame:
-    """Attach (sentiment, category) for one answer column via the cache
-    rewrite. The join back is a broadcast when the distinct-answer table
-    fits (the common case -- it is bounded by distinct answers, not rows)."""
-    spark = df.sparkSession
-    keyed = df.withColumn("industry", F.lit(industry)) \
-              .withColumn("question", F.lit(question)) \
-              .withColumn("answer", F.col(answer_col))
-    results = classify_with_cache(
-        keyed.select(*KEY_COLS), classifier, spark, cache_path,
-        max_parallelism=max_parallelism)
-    return (
-        keyed.join(F.broadcast(results), KEY_COLS, "left")
-        .drop("industry", "question", "answer")
-    )
+    if not misses.isEmpty():
+        computed.write.mode("append").parquet(cache_path)
+    return load_cache(spark, cache_path).join(
+        distinct_keys, KEY_COLS, "left_semi")

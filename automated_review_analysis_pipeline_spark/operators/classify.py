@@ -17,8 +17,9 @@ API call):
 - stub_kernel      : deterministic fake with the same plumbing -- tests and
                      demo runs exercise batching/retry paths at zero cost.
 
-All kernels return a struct<sentiment string, category string> column and
-plug into plans/survey_pipeline.analyze_wide or operators/cache.
+Every kernel is a ``classifier(question: Column, answer: Column) ->
+struct<sentiment string, category string>`` column function -- the one
+classifier contract of plans/survey_pipeline and operators/cache.
 
 Scale: Arrow batch size rides spark.sql.execution.arrow.maxRecordsPerBatch;
 API-mode concurrency is bounded by partition count (`repartition(n)` before
@@ -44,6 +45,7 @@ from automated_review_analysis_pipeline_spark.functions.classify import (
     POS_LEXICON,
 )
 from automated_review_analysis_pipeline_spark.functions.text import FILLER_VALUES
+from automated_review_analysis_pipeline_spark.operators.cache import Classifier
 
 _FILLER = set(FILLER_VALUES)
 
@@ -89,7 +91,7 @@ def _lexicon_sentiment(low: str) -> str:
 
 def vader_kernel(
     lexicon_dir: str | None = None,
-) -> Callable[[str, Column], Column]:
+) -> Classifier:
     """C1: VADER compound >= 0.35 -> Positive; <= -0.35 -> Negative;
     |score| < 0.35 with a contrast conjunction -> Mixed; else Neutral
     (survey_analysis.py:118-129).
@@ -131,14 +133,14 @@ def vader_kernel(
                 cats.append(_demo_category(low))
             yield pd.DataFrame({"sentiment": sents, "category": cats})
 
-    def classifier(question_text: str, answer: Column) -> Column:
+    def classifier(question: Column, answer: Column) -> Column:
         return _vader(answer)
 
     classifier.uses_vader = scorer is not None
     return classifier
 
 
-def stub_kernel(tag: str = "Stub") -> Callable[[str, Column], Column]:
+def stub_kernel(tag: str = "Stub") -> Classifier:
     """Deterministic fake LLM: same UDF plumbing (Arrow batches, struct
     result), zero cost. sentiment = lexicon; category = first token
     capitalized or ``tag``."""
@@ -152,7 +154,7 @@ def stub_kernel(tag: str = "Stub") -> Callable[[str, Column], Column]:
             cats = cats.where(cats != "", tag)
             yield pd.DataFrame({"sentiment": sents, "category": cats})
 
-    def classifier(question_text: str, answer: Column) -> Column:
+    def classifier(question: Column, answer: Column) -> Column:
         return _stub(answer)
 
     return classifier
@@ -166,7 +168,7 @@ def llm_kernel(
     api_base: str | None = None,
     client_factory: Callable[[], object] | None = None,
     base_delay: float = 1.0,
-) -> Callable[[str, Column], Column]:
+) -> Classifier:
     """C5+C6: LLM classification via an OpenAI-compatible endpoint.
 
     Reference-parity details (survey_analysis.py:171-217):
@@ -177,80 +179,81 @@ def llm_kernel(
     - terminal failure -> ("Neutral", "No Feedback") + stderr warning
     - empty category -> "No Feedback"
 
-    The question text is embedded per-column at plan time (each question
-    column gets its own UDF closure), matching how the reference sends the
-    header text with every request.
+    The question rides in as a column next to the answer, so one UDF
+    serves every question (the raw header text goes into each request,
+    as the reference sends it).
 
     ``client_factory`` injects an OpenAI-compatible client builder (tests
     pass a fake; production default constructs the real one per executor);
     ``base_delay`` scales the backoff (tests set ~0 to avoid sleeping).
     """
 
-    def classifier(question_text: str, answer: Column) -> Column:
-        @pandas_udf(RESULT_TYPE)
-        def _llm(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            import json
+    @pandas_udf(RESULT_TYPE)
+    def _llm(batches: Iterator[tuple[pd.Series, pd.Series]]
+             ) -> Iterator[pd.DataFrame]:
+        import json
 
-            try:
-                if client_factory is not None:
-                    client = client_factory()
-                else:
-                    from openai import OpenAI  # type: ignore
-                    kwargs = {"base_url": api_base} if api_base else {}
-                    client = OpenAI(**kwargs)
-            except Exception:
-                client = None
+        try:
+            if client_factory is not None:
+                client = client_factory()
+            else:
+                from openai import OpenAI  # type: ignore
+                kwargs = {"base_url": api_base} if api_base else {}
+                client = OpenAI(**kwargs)
+        except Exception:
+            client = None
 
-            def classify_one(ans: str) -> tuple[str, str]:
-                # In-UDF filler guard: the plan's when/otherwise picks the
-                # right OUTPUT for filler rows, but Spark hoists Python
-                # UDFs into an ArrowEvalPython stage that runs for ALL
-                # rows -- without this check filler rows would still cost
-                # an API call (the reference's P3 saved ~17% of calls).
-                if (ans or "").strip().lower() in _FILLER:
-                    return "Neutral", "No Feedback"
-                if client is None:
-                    return "Neutral", "No Feedback"
-                delay = base_delay
-                for attempt in range(max_retries):
-                    try:
-                        resp = client.chat.completions.create(
-                            model=model,
-                            temperature=0.1,
-                            max_tokens=max_tokens,
-                            response_format={"type": "json_object"},
-                            messages=[
-                                {"role": "system", "content": SYS_PROMPT},
-                                {"role": "user", "content":
-                                 build_user_prompt(industry, question_text,
-                                                   ans)},
-                            ],
-                        )
-                        content = resp.choices[0].message.content or "{}"
-                        data = json.loads(content)
-                        sentiment = _normalize_sentiment(
-                            str(data.get("sentiment", "Neutral")))
-                        category = (data.get("category")
-                                    or "No Feedback").strip()
-                        if not category:
-                            category = "No Feedback"
-                        return sentiment, category
-                    except Exception as e:
-                        if attempt == max_retries - 1:
-                            print(f"LLM classify failed after {max_retries} "
-                                  f"tries: {e}", file=sys.stderr)
-                            return "Neutral", "No Feedback"
-                        time.sleep(delay)
-                        delay = min(delay * 2, 8.0 * base_delay)
+        def classify_one(question: str, ans: str) -> tuple[str, str]:
+            # In-UDF filler guard: the plan's when/otherwise picks the
+            # right OUTPUT for filler rows, but Spark hoists Python
+            # UDFs into an ArrowEvalPython stage that runs for ALL
+            # rows -- without this check filler rows would still cost
+            # an API call (the reference's P3 saved ~17% of calls).
+            if (ans or "").strip().lower() in _FILLER:
                 return "Neutral", "No Feedback"
+            if client is None:
+                return "Neutral", "No Feedback"
+            delay = base_delay
+            for attempt in range(max_retries):
+                try:
+                    resp = client.chat.completions.create(
+                        model=model,
+                        temperature=0.1,
+                        max_tokens=max_tokens,
+                        response_format={"type": "json_object"},
+                        messages=[
+                            {"role": "system", "content": SYS_PROMPT},
+                            {"role": "user", "content":
+                             build_user_prompt(industry, question, ans)},
+                        ],
+                    )
+                    content = resp.choices[0].message.content or "{}"
+                    data = json.loads(content)
+                    sentiment = _normalize_sentiment(
+                        str(data.get("sentiment", "Neutral")))
+                    category = (data.get("category")
+                                or "No Feedback").strip()
+                    if not category:
+                        category = "No Feedback"
+                    return sentiment, category
+                except Exception as e:
+                    if attempt == max_retries - 1:
+                        print(f"LLM classify failed after {max_retries} "
+                              f"tries: {e}", file=sys.stderr)
+                        return "Neutral", "No Feedback"
+                    time.sleep(delay)
+                    delay = min(delay * 2, 8.0 * base_delay)
+            return "Neutral", "No Feedback"
 
-            for batch in texts:
-                pairs = [classify_one(str(t)) for t in batch.fillna("")]
-                yield pd.DataFrame(pairs, columns=["sentiment", "category"])
+        for questions, answers in batches:
+            pairs = [classify_one(str(q), str(a))
+                     for q, a in zip(questions, answers.fillna(""))]
+            yield pd.DataFrame(pairs, columns=["sentiment", "category"])
 
-        return _llm(answer)
+    def classifier(question: Column, answer: Column) -> Column:
+        return _llm(question, answer)
 
     # P6: only API-bound text is truncated to max_chars
-    # (survey_analysis.py:264-265); analyze_wide reads this flag
+    # (survey_analysis.py:264-265); the survey plans read this flag
     classifier.truncate_input = True
     return classifier

@@ -1901,6 +1901,15 @@ GROUP BY doc_id ORDER BY doc_id
 """
 
 
+def _bm25_doc_score(term_score: Column) -> Column:
+    """Per-doc BM25 score from 6dp term scores: an exact DECIMAL(18,6)
+    sum rounded to 4dp -- a double sum rounded to 4dp depends on the
+    order the postings arrive in whenever it lands on a rounding
+    boundary (0.08355 vs 0.08354999999999999)."""
+    return (F.round(F.sum(term_score.cast("decimal(18,6)")), 4)
+            .cast("double").alias("bm25"))
+
+
 def bm25_search(documents: DataFrame, query_terms: tuple[str, ...],
                 k: int = 20, k1: float = 1.2, b: float = 0.75,
                 id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -1920,8 +1929,8 @@ def bm25_search(documents: DataFrame, query_terms: tuple[str, ...],
 
     Float discipline: per-term scores rounded at 6dp (one ln + a handful
     of IEEE ops on identical inputs -- engine-stable, as tf_idf proved),
-    the per-doc sum rounded at 4dp so summation order cannot flip the
-    value-hash.
+    then summed per doc EXACTLY as DECIMAL(18,6) and rounded at 4dp
+    (:func:`_bm25_doc_score`), so summation order cannot flip the value.
     """
     from pyspark.sql.functions import broadcast
 
@@ -1955,7 +1964,7 @@ def bm25_search(documents: DataFrame, query_terms: tuple[str, ...],
         .select(id_col, term_score.alias("__s"))
         .groupBy(id_col)
         .agg(
-            F.round(F.sum("__s"), 4).alias("bm25"),
+            _bm25_doc_score(F.col("__s")),
             F.count(F.lit(1)).alias("n_terms_matched"),
         )
         .orderBy(F.desc("bm25"), id_col)
@@ -1992,7 +2001,7 @@ WITH words AS (
                6) AS s
   FROM tf JOIN dft USING (word) JOIN dl USING (doc_id), stats
 )
-SELECT doc_id, round(sum(s), 4) AS bm25,
+SELECT doc_id, round(sum(CAST(s AS DECIMAL(18,6))), 4)::DOUBLE AS bm25,
        count(*) AS n_terms_matched
 FROM terms GROUP BY doc_id
 ORDER BY bm25 DESC, doc_id LIMIT {k}
@@ -2253,7 +2262,7 @@ def bm25_index_search(spark, store_dir: str, query_terms: tuple[str, ...],
             .join(dl, id_col)
             .select(id_col, term_score.alias("__s"))
             .groupBy(id_col)
-            .agg(F.round(F.sum("__s"), 4).alias("bm25"),
+            .agg(_bm25_doc_score(F.col("__s")),
                  F.count(F.lit(1)).alias("n_terms_matched"))
             .orderBy(F.desc("bm25"), id_col)
             .limit(k))

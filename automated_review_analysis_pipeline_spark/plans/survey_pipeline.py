@@ -8,6 +8,14 @@ triplets into one output row per product. Here the row loop disappears:
     scan -> clean columns -> classify columns -> explode(products)
          -> dynamic select list [ResponseID, Product, triplets...]
 
+Every classifier follows one contract, ``classifier(question: Column,
+answer: Column) -> struct<sentiment, category>``. :func:`analyze_wide`
+applies it inline per question column with ``F.lit(question)``;
+:func:`analyze_wide_cached` stacks the cleaned answers into one
+(industry, question, answer) key frame and hands it to
+operators/cache.classify_with_cache -- the single memo-cache
+implementation -- then broadcast-joins each question's results back.
+
 Plan-construction discipline:
 
 * classify-before-explode (reference R2): each response is classified once
@@ -23,8 +31,6 @@ Plan-construction discipline:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -37,14 +43,16 @@ from automated_review_analysis_pipeline_spark.functions.text import (
     is_filler,
     sanitize_base,
 )
+from automated_review_analysis_pipeline_spark.operators.cache import (
+    CACHE_SCHEMA,
+    Classifier,
+    classify_with_cache,
+)
 from automated_review_analysis_pipeline_spark.operators.reshape import explode_products
 from automated_review_analysis_pipeline_spark.sources.survey import question_columns
 
-# classifier(question_text, cleaned_answer_col) -> struct(sentiment, category)
-Classifier = Callable[[str, Column], Column]
 
-
-def demo_classifier(question_text: str, answer: Column) -> Column:
+def demo_classifier(question: Column, answer: Column) -> Column:
     """Deterministic demo kernel (C2 lexicon sentiment + C3 keyword
     category) -- pure column expressions, SQL-oracle-checkable."""
     return F.struct(
@@ -116,6 +124,18 @@ def _staged_clean(survey: DataFrame, id_col: str | None):
     return df, questions, bases, products_col, base_to_display
 
 
+def _api_bound(classifier: Classifier, max_chars: int) -> Classifier:
+    """P6: a kernel that declares ``truncate_input = True`` (the API
+    kernel) sees only the first ``max_chars`` characters, like the
+    reference's ``ans_for_api = ans[:max_chars]``
+    (survey_analysis.py:264-265); the demo/VADER kernels score the full
+    cleaned answer (:263)."""
+    if not getattr(classifier, "truncate_input", False):
+        return classifier
+    return lambda question, answer: classifier(
+        question, F.substring(answer, 1, max_chars))
+
+
 def _finalize_wide(df: DataFrame, bases: list[str],
                    products_col: str) -> DataFrame:
     """Stage 3 shared by both plans: explode AFTER classification
@@ -157,16 +177,15 @@ def analyze_wide(
     # Stage 2: classify from the cleaned ATTRIBUTE (not the regex expr).
     # Filler short-circuit (P3, survey_analysis.py:284-285) skips the
     # classifier -- with a UDF kernel this also skips the Python/API call.
-    truncate = getattr(classifier, "truncate_input", False)
+    kernel = _api_bound(classifier, max_chars)
     res_cols = []
     for q, b in zip(questions, bases):
         ans = F.col(f"{b}_Answer")
-        cls_input = F.substring(ans, 1, max_chars) if truncate else ans
         res = F.when(
             is_filler(ans),
             F.struct(F.lit("Neutral").alias("sentiment"),
                      F.lit("No Feedback").alias("category")),
-        ).otherwise(classifier(q, cls_input))
+        ).otherwise(kernel(F.lit(q), ans))
         res_cols.append(res.alias(f"__res_{b}"))
     df = df.select("*", *res_cols)
 
@@ -184,95 +203,44 @@ def analyze_wide_cached(
 ) -> tuple[DataFrame, dict[str, str]]:
     """analyze_wide with the reference's memo cache wired in (C7,
     survey_analysis.py:257-273): every distinct non-filler (industry,
-    question-header, answer) key is classified ONCE through the parquet
-    cache table -- anti-join selects the misses, the kernel runs only on
-    those, results append atomically, and the (hit + new) table
-    broadcast-joins back onto the wide frame per question. Filler rows
-    never enter the cache (the reference short-circuits BEFORE
-    get_sent_cat, :284-285), and the cache key carries the FULL cleaned
-    answer while only API-bound text is truncated (:259, :264-265).
+    question-header, answer) key is classified ONCE through
+    classify_with_cache -- misses only, one classifier pass with the
+    question as a column, one atomic append -- and each question's
+    results broadcast-join back onto the wide frame. Filler rows never
+    enter the cache (the reference short-circuits BEFORE get_sent_cat,
+    :284-285), and the cache key carries the FULL cleaned answer while
+    only API-bound text is truncated (:259, :264-265).
 
     This is the plan the CLI runs when a cache path is configured, in
     BOTH modes (the reference consults the cache before VADER too) -- a
     reference user's migrated .analysis_cache.json (import_json_cache)
     short-circuits every already-paid classification. ``max_parallelism``
     bounds API-mode concurrency (classify_with_cache repartitions the
-    miss set)."""
-    from automated_review_analysis_pipeline_spark.operators.cache import (
-        KEY_COLS,
-        load_cache,
-    )
-    from automated_review_analysis_pipeline_spark.plan_cache import (
-        plan_cache,
-    )
+    miss set; default: the session's default parallelism).
 
+    The survey's results are collected once on the driver -- the same
+    distinct-key set the broadcasts ship -- so the returned plan holds
+    no cached relation and no reference to the cache files."""
     df, questions, bases, products_col, base_to_display = \
         _staged_clean(survey, id_col)
-    # keys derive from the PRE-JOIN cleaned frame (df before the
-    # result joins below): the eager cache-append executes the key
-    # plan, and threading keys through the progressively-joined frame
-    # would re-run every prior broadcast join inside it (O(Q^2))
-    cleaned = df
-    spark = survey.sparkSession
-    truncate = getattr(classifier, "truncate_input", False)
-    q_names = [str(q).strip() for q in questions]
-
     # degenerate survey (no question columns past the 3 fixed ones):
-    # nothing to classify, so skip the cache pass entirely -- mirrors
-    # plain analyze_wide, which loops zero times and finalizes
-    if not q_names:
+    # nothing to classify, so no cache pass -- like analyze_wide
+    if not questions:
         return _finalize_wide(df, bases, products_col), base_to_display
 
-    # ONE cache pass for all questions (vs one anti-join + append per
-    # question): union the per-question distinct key sets, anti-join the
-    # cache once, run each question's kernel on ITS slice of the
-    # plan-cached miss set (per-question slices, not a when-chain over
-    # UDFs -- Spark evaluates every UDF referenced in a projection for
-    # every row, which would multiply API calls by |questions|), append
-    # the union atomically, and read the combined results back.
-    all_keys = None
-    for qn, b in zip(q_names, bases):
-        k = cleaned.select(
-            F.lit(industry).alias("industry"),
-            F.lit(qn).alias("question"),
-            F.col(f"{b}_Answer").alias("answer"),
-        ).where(~is_filler(F.col("answer")))
-        all_keys = k if all_keys is None else all_keys.unionByName(k)
-    # ONE distinct over the union (narrow selects feed a single shuffle),
-    # cached: the key set is consumed by the anti-join AND the read-back
-    # semi-join -- uncached it would recompute per consumer
-    all_keys = plan_cache(all_keys.distinct())
-
-    cache = load_cache(spark, cache_path)
-    # repartition bounds BOTH the API concurrency (max_parallelism) and
-    # the task fan-out of the per-question kernel branches below (each
-    # branch scans every partition of the cached miss set, so partition
-    # count multiplies by |questions| in the write job)
-    misses = (
-        all_keys.join(cache, KEY_COLS, "left_anti")
-        .repartition(max_parallelism
-                     or spark.sparkContext.defaultParallelism)
-    )
-    misses = plan_cache(misses)
-
-    inp = F.substring(F.col("answer"), 1, max_chars) \
-        if truncate else F.col("answer")
-    computed = None
-    for qn in q_names:
-        part = misses.where(F.col("question") == qn).select(
-            *KEY_COLS, classifier(qn, inp).alias("__r")
-        ).select(
-            *KEY_COLS,
-            F.col("__r.sentiment").alias("sentiment"),
-            F.col("__r.category").alias("category"),
-        )
-        computed = part if computed is None else computed.unionByName(part)
-
-    # atomic append of ALL misses (replaces the reference's
-    # flush-every-200); re-runs then classify zero rows
-    computed.write.mode("append").parquet(cache_path)
-    results = plan_cache(
-        load_cache(spark, cache_path).join(all_keys, KEY_COLS, "left_semi"))
+    spark = survey.sparkSession
+    q_names = [str(q).strip() for q in questions]
+    pairs = [c for qn, b in zip(q_names, bases)
+             for c in (F.lit(qn), F.col(f"{b}_Answer"))]
+    keys = df.select(
+        F.lit(industry).alias("industry"),
+        F.stack(F.lit(len(q_names)), *pairs).alias("question", "answer"),
+    ).where(~is_filler(F.col("answer")))
+    rows = classify_with_cache(
+        keys, _api_bound(classifier, max_chars), spark, cache_path,
+        max_parallelism or spark.sparkContext.defaultParallelism,
+    ).collect()
+    results = spark.createDataFrame(rows, CACHE_SCHEMA)
 
     for qn, b in zip(q_names, bases):
         res_b = results.where(F.col("question") == qn).select(

@@ -19,8 +19,6 @@ Excel only ever receives aggregates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from automated_review_analysis_pipeline_spark.functions.text import sanitize_sheet_name
@@ -54,43 +52,16 @@ def write_excel_report(wide: DataFrame, out_path: str,
     wide_rows = wide.orderBy("ResponseID").collect()
     cols = wide.columns
 
-    products = sorted({r["Product"] for r in wide_rows})
-    sheets: list[str] = []
-
     per_product = {
         p: sorted(
             (r for r in wide_rows if r["Product"] == p),
             key=lambda r: r["ResponseID"],  # string sort: golden-quirk O1
         )
-        for p in products
+        for p in sorted({r["Product"] for r in wide_rows})
     }
 
     return _write_xlsx(out_path, cols, per_product, summary_rows,
                        base_to_display)
-
-
-def write_csv_dir(out_path: str, cols, per_product, summary_rows) -> list[str]:
-    """Plain-CSV export: <out_path>/ with one CSV per data sheet (kept as
-    an explicit alternative format; the default sink now always writes a
-    real workbook)."""
-    import csv
-
-    root = out_path if not out_path.endswith(".xlsx") else out_path[:-5]
-    os.makedirs(root, exist_ok=True)
-    sheets = []
-    for product, rows in per_product.items():
-        name = sanitize_sheet_name(product)
-        sheets.append(name)
-        with open(os.path.join(root, f"{name}.csv"), "w", newline="") as f:
-            w = csv.writer(f)
-            w.writerow(cols)
-            w.writerows([list(r) for r in rows])
-    with open(os.path.join(root, "Summary.csv"), "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["Product", "Question", *SENTIMENTS])
-        w.writerows([list(r) for r in summary_rows])
-    sheets.append("Summary")
-    return sheets
 
 
 def _write_xlsx(out_path: str, cols, per_product, summary_rows,

@@ -3,6 +3,8 @@ EXACTLY the one-shot scorer's inputs, searches are bucket-pruned to
 the query terms, and replayed appends are no-ops."""
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark import fsio
@@ -155,3 +157,46 @@ def test_streaming_bm25_auto_compact_bounds_files_per_bucket(
         if m:
             buckets[m.group(1)] = buckets.get(m.group(1), 0) + 1
     assert buckets and max(buckets.values()) <= 2, buckets
+
+
+# One doc of each corpus has 6dp term scores that sum EXACTLY to a 4dp
+# rounding boundary. Doc 4: 0.448391 + 0.313874 + 0.871385 = 1.63365,
+# which a double sum reads as 1.6336 or 1.6337 depending on the order
+# the postings arrive in. Doc 2: 0.812182 + 0.266886 + 0.812182 =
+# 1.89125, which every double summation order reads as 1.8912.
+BOUNDARY_CORPORA = [
+    ([(1, "y"), (2, "red green y y"), (3, "red blue z z z green x"),
+      (4, "z blue green red red blue")], 4, 1.6337),
+    ([(1, "green green"), (2, "green x blue x red"),
+      (3, "green green red y x"), (4, "w x z z y w"), (5, "x blue green")],
+     2, 1.8913),
+]
+
+
+@pytest.mark.parametrize("corpus,doc_id,score", BOUNDARY_CORPORA)
+def test_bm25_scores_independent_of_postings_order(spark, tmp_path, corpus,
+                                                   doc_id, score):
+    """Permuting the postings order (corpus order, partitioning, and
+    which docs the index build vs. the append receives) leaves every
+    score identical across the one-shot scorer, the persisted index and
+    the DuckDB twin, and the boundary doc rounds its exact sum half-up."""
+    query = ("red", "green", "blue")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", corpus)
+    want = con.execute(ta.bm25_search_sql(query, k=10)).fetchall()
+    con.close()
+    assert dict((r[0], r[1]) for r in want)[doc_id] == score
+    for i, order in enumerate((corpus, corpus[::-1],
+                               corpus[1::2] + corpus[::2])):
+        docs = spark.createDataFrame(order, "doc_id long, text string") \
+            .repartition(i + 1)
+        assert _rows(ta.bm25_search(docs, query, k=10)) == want
+        store = str(tmp_path / f"bm25_{i}")
+        half = len(order) // 2
+        ta.build_bm25_index(
+            spark.createDataFrame(order[:half], "doc_id long, text string"),
+            store, n_buckets=2)
+        ta.bm25_index_append(spark, store, spark.createDataFrame(
+            order[half:], "doc_id long, text string"))
+        assert _rows(ta.bm25_index_search(spark, store, query, k=10)) == want

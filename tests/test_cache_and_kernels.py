@@ -2,17 +2,21 @@
 
 from __future__ import annotations
 
+import os
+from collections.abc import Iterator
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from automated_review_analysis_pipeline_spark.operators.cache import (
     KEY_COLS,
-    classify_column_with_cache,
     classify_with_cache,
     load_cache,
 )
 from automated_review_analysis_pipeline_spark.operators.classify import (
+    RESULT_TYPE,
     stub_kernel,
     vader_kernel,
 )
@@ -25,35 +29,41 @@ from automated_review_analysis_pipeline_spark.operators.multimodal import (
 from automated_review_analysis_pipeline_spark.plans.survey_pipeline import analyze_wide
 
 
-def _counting_classifier(counter):
-    def classify(keys_df):
-        rows = keys_df.collect()
-        counter["calls"] += len(rows)
-        spark = keys_df.sparkSession
-        out = [(r["industry"], r["question"], r["answer"], "Positive", "Stub")
-               for r in rows]
-        return spark.createDataFrame(
-            out, "industry string, question string, answer string, "
-                 "sentiment string, category string")
-    return classify
+def _counting_kernel(marker_dir):
+    """Column kernel that classifies every answer (Positive, Stub) and
+    leaves one executor-side marker file per answer classified (local
+    mode: workers share the filesystem)."""
+    os.makedirs(marker_dir, exist_ok=True)
+
+    @pandas_udf(RESULT_TYPE)
+    def _count(answers: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        import uuid
+
+        for batch in answers:
+            for _ in batch:
+                open(os.path.join(marker_dir, uuid.uuid4().hex), "w").close()
+            yield pd.DataFrame({"sentiment": ["Positive"] * len(batch),
+                                "category": ["Stub"] * len(batch)})
+
+    return lambda question, answer: _count(answer)
 
 
 def test_cache_dedups_and_is_idempotent(spark, tmp_path):
     cache_path = str(tmp_path / "cache_parquet")
+    marker = str(tmp_path / "calls")
     keys = spark.createDataFrame(
         [("retail", "q1", "love it")] * 5 + [("retail", "q1", "meh")] * 3,
         KEY_COLS)
-    counter = {"calls": 0}
-    out = classify_with_cache(keys, _counting_classifier(counter), spark,
+    out = classify_with_cache(keys, _counting_kernel(marker), spark,
                               cache_path)
     assert out.count() == 2          # distinct keys only
-    assert counter["calls"] == 2     # dedup-before-compute (C7)
+    assert len(os.listdir(marker)) == 2   # dedup-before-compute (C7)
 
     # second run: all hits, zero classifier calls
-    out2 = classify_with_cache(keys, _counting_classifier(counter), spark,
+    out2 = classify_with_cache(keys, _counting_kernel(marker), spark,
                                cache_path)
     assert out2.count() == 2
-    assert counter["calls"] == 2
+    assert len(os.listdir(marker)) == 2
 
     cached = load_cache(spark, cache_path)
     assert cached.count() == 2
@@ -91,24 +101,10 @@ def test_import_reference_json_cache(spark, tmp_path):
     # imported keys are cache HITS: classifier sees zero calls
     keys = spark.createDataFrame(
         [(ind, q, ans)], KEY_COLS)
-    counter = {"calls": 0}
-    out = classify_with_cache(keys, _counting_classifier(counter), spark,
+    marker = str(tmp_path / "calls")
+    out = classify_with_cache(keys, _counting_kernel(marker), spark,
                               cache_path)
-    assert out.count() == 1 and counter["calls"] == 0
-
-
-def test_classify_column_with_cache_joins_back(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "love it"), (2, "love it"), (3, "meh")], ["id", "ans"])
-    counter = {"calls": 0}
-    out = classify_column_with_cache(
-        df, "retail", "q1", "ans", _counting_classifier(counter),
-        str(tmp_path / "c2"))
-    rows = {r["id"]: r for r in out.collect()}
-    assert counter["calls"] == 2
-    assert rows[1]["sentiment"] == "Positive"
-    assert rows[3]["category"] == "Stub"
-    assert len(rows) == 3
+    assert out.count() == 1 and not os.listdir(marker)
 
 
 def test_stub_kernel_plumbs_through_pipeline(spark):

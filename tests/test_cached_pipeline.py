@@ -12,12 +12,19 @@ cache -- cache precedence proven by value provenance, not instrumentation.
 
 from __future__ import annotations
 
+import os
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from automated_review_analysis_pipeline_spark.operators.cache import (
     import_json_cache,
     load_cache,
+)
+from automated_review_analysis_pipeline_spark.operators.classify import (
+    RESULT_TYPE,
 )
 from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
     analyze_wide,
@@ -221,8 +228,8 @@ def test_duplicate_cache_keys_collapse_on_read(spark, tmp_path):
         [("Apparel", "Q1", "great stuff")],
         "industry string, question string, answer string")
     out = classify_with_cache(
-        keys, lambda m: m.selectExpr(
-            "*", "'X' AS sentiment", "'Y' AS category"),
+        keys, lambda question, answer: F.struct(
+            F.lit("X").alias("sentiment"), F.lit("Y").alias("category")),
         spark, cache)
     assert out.count() == 1   # not fanned out by the duplicate
 
@@ -430,3 +437,113 @@ def test_run_cli_uses_cache(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "report.xlsx")
     api.run(CSV_PATH, "Apparel", output=out, cache=cache, spark=spark)
     assert load_cache(spark, cache).count() == 278
+
+
+# Inline survey for the tests below (no reference checkout needed):
+# three questions, "love it" answered under both Q1 and Q2, filler
+# cells, multi-product and no-product rows.
+INLINE_SURVEY = [
+    ("a@x", "A", "P1, P2", "love it", "love it", "n/a"),
+    ("b@x", "B", "P1", "bad quality", "none", "love it"),
+    ("c@x", "C", "", "love it", "late shipping", "great fit"),
+    ("d@x", "D", "P2,P3", "-", "love it", "bad quality"),
+]
+INLINE_COLUMNS = ["Email", "Name", "Products", "Q1", "Q2", "Q3"]
+
+
+def question_aware_kernel(question, answer):
+    """UDF kernel whose category spells out the (question, answer) pair
+    it was handed, so a question/answer mix-up changes the output."""
+
+    @pandas_udf(RESULT_TYPE)
+    def _kernel(questions: pd.Series, answers: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame({
+            "sentiment": answers.str.len().astype(str),
+            "category": questions + "|" + answers,
+        })
+
+    return _kernel(question, answer)
+
+
+def _arrow_eval_nodes_since(spark, first_execution):
+    """ArrowEvalPython nodes in the plans of every SQL execution with
+    id >= first_execution (the SQL status store keeps each one's final
+    plan graph)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    n = 0
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid >= first_execution:
+            nodes = store.planGraph(eid).allNodes()
+            n += sum(nodes.apply(j).name() == "ArrowEvalPython"
+                     for j in range(nodes.size()))
+    return n
+
+
+def _next_execution_id(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return 1 + max([execs.apply(i).executionId()
+                    for i in range(execs.size())], default=-1)
+
+
+def test_cached_pipeline_matches_uncached_inline(spark, tmp_path):
+    """Cold cached plan == plain analyze_wide on an inline survey with a
+    question-aware UDF kernel, and the cold plan classifies every
+    question in ONE ArrowEvalPython node."""
+    survey = spark.createDataFrame(INLINE_SURVEY, INLINE_COLUMNS)
+    first = _next_execution_id(spark)
+    cached, b2d = analyze_wide_cached(
+        survey, question_aware_kernel, "retail", str(tmp_path / "cache"))
+    got = sorted(tuple(r) for r in cached.collect())
+    assert _arrow_eval_nodes_since(spark, first) == 1
+
+    plain, _ = analyze_wide(survey, classifier=question_aware_kernel)
+    assert got == sorted(tuple(r) for r in plain.collect())
+    assert len(got) == 6 and list(b2d) == ["Q1", "Q2", "Q3"]
+    cells = {(r[1], r[2], r[7]) for r in got}     # (Product, Q1, Q2 cat)
+    assert ("P1", "love it", "Q2|love it") in cells
+    assert ("Unspecified", "love it", "Q2|late shipping") in cells
+    assert ("P1", "bad quality", "No Feedback") in cells   # filler
+
+
+def test_warm_run_writes_no_cache_file(spark, tmp_path):
+    """A warm run (every key a hit) appends nothing: the cache
+    directory's file list is unchanged by it."""
+    survey = spark.createDataFrame(INLINE_SURVEY, INLINE_COLUMNS)
+    cache = str(tmp_path / "cache")
+    cold, _ = analyze_wide_cached(
+        survey, question_aware_kernel, "retail", cache)
+    cold_rows = sorted(tuple(r) for r in cold.collect())
+    files = sorted(os.listdir(cache))
+    warm, _ = analyze_wide_cached(
+        survey, question_aware_kernel, "retail", cache)
+    assert sorted(tuple(r) for r in warm.collect()) == cold_rows
+    assert sorted(os.listdir(cache)) == files
+
+
+def test_repeated_runs_hold_no_persisted_rdds(spark, tmp_path, monkeypatch):
+    """api.run owns what its report persists: after each of three
+    reports in one session, no RDD it persisted is still held."""
+    import csv
+
+    from automated_review_analysis_pipeline_spark import api
+
+    monkeypatch.delenv("OPENAI_API_KEY", raising=False)
+    monkeypatch.delenv("ARAP_VADER_LEXICON_DIR", raising=False)
+    csv_path = str(tmp_path / "survey.csv")
+    with open(csv_path, "w", newline="", encoding="utf-8") as f:
+        csv.writer(f).writerows([INLINE_COLUMNS, *INLINE_SURVEY])
+    def persisted():
+        # ids, not a count: the context cleaner may drop earlier tests'
+        # RDDs meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    for i in range(3):
+        api.run(csv_path, "retail", output=str(tmp_path / f"r{i}.xlsx"),
+                cache=str(tmp_path / "cache"), spark=spark)
+        assert persisted() <= before

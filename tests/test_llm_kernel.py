@@ -11,8 +11,15 @@ reference to a module the workers cannot import).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 
-from automated_review_analysis_pipeline_spark.operators.classify import llm_kernel
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+
+from automated_review_analysis_pipeline_spark.operators.classify import (
+    RESULT_TYPE,
+    llm_kernel,
+)
 from automated_review_analysis_pipeline_spark.plans.survey_pipeline import analyze_wide
 
 
@@ -175,12 +182,11 @@ def test_prompt_text_matches_reference_verbatim(spark, tmp_path):
         assert ours[k] == ref_captured[k], k
 
 
-def test_classify_stage_respects_max_parallelism(spark):
+def test_classify_stage_respects_max_parallelism(spark, tmp_path):
     """API-mode concurrency bound: classify_with_cache repartitions the
     miss set to exactly max_parallelism partitions before the classifier
-    runs (the reference's sequential loop = max_parallelism 1)."""
-    from pyspark.sql import functions as F
-
+    runs (the reference's sequential loop = max_parallelism 1). The
+    kernel leaves one executor-side marker file per classify task."""
     from automated_review_analysis_pipeline_spark.operators.cache import (
         classify_with_cache,
     )
@@ -189,20 +195,26 @@ def test_classify_stage_respects_max_parallelism(spark):
         [("retail", "q", f"answer {i}") for i in range(40)],
         "industry string, question string, answer string")
 
-    observed = {}
+    def per_task_kernel(marker):
+        os.makedirs(marker)
 
-    def classifier(misses):
-        observed["partitions"] = misses.rdd.getNumPartitions()
-        return misses.select(
-            "*", F.lit("Neutral").alias("sentiment"),
-            F.lit("General").alias("category"))
+        @pandas_udf(RESULT_TYPE)
+        def _kernel(answers: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+            import uuid
 
-    out = classify_with_cache(keys, classifier, spark, max_parallelism=3)
-    assert out.count() == 40
-    assert observed["partitions"] == 3
+            open(os.path.join(marker, uuid.uuid4().hex), "w").close()
+            for batch in answers:
+                yield pd.DataFrame({"sentiment": ["Neutral"] * len(batch),
+                                    "category": ["General"] * len(batch)})
 
-    classify_with_cache(keys, classifier, spark, max_parallelism=1).count()
-    assert observed["partitions"] == 1
+        return lambda question, answer: _kernel(answer)
+
+    for n in (3, 1):
+        marker = str(tmp_path / f"tasks{n}")
+        out = classify_with_cache(keys, per_task_kernel(marker), spark,
+                                  max_parallelism=n)
+        assert len(out.collect()) == 40
+        assert len(os.listdir(marker)) == n
 
 
 def test_llm_kernel_filler_short_circuit_skips_api(spark, tmp_path):
