@@ -7,11 +7,11 @@ category) in a JSON dict, consulted before every classifier call and
 flushed every 200 new entries. On the bundled data that's a ~7.4x
 reduction in classifier invocations (2 071 non-filler cells -> 278
 distinct). Catalyst will never dedup UDF inputs on its own, so
-:func:`classify_with_cache` reproduces the effect as a plan rewrite:
+:func:`classify_with_cache` reproduces the effect in ONE Spark action:
 
-    distinct(keys) --left-anti join--> cache table   = misses
-    misses --classifier(question, answer)--> results --append--> cache
-    cache --left-semi join--> distinct(keys)          = every key's result
+    distinct(keys) --left-anti--> cache --classifier--> misses (tagged)
+    cache --left-semi--> distinct(keys)                = hits (tagged)
+    collect(hits UNION ALL misses); misses --> one file --> cache dir
 
 The classifier is the survey plans' column contract,
 ``classifier(question: Column, answer: Column) -> struct<sentiment,
@@ -20,14 +20,17 @@ one bulk pass over the distinct texts of every question.
 
 Idempotence comes free: a re-run anti-joins everything away, classifies
 zero rows and appends nothing (the reference needed incremental flushing
-for crash-resume; an atomic append of the miss partition subsumes it).
+for crash-resume; an atomic rename of the one miss file subsumes it).
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +39,7 @@ CACHE_SCHEMA = ("industry string, question string, answer string, "
 
 KEY_COLS = ["industry", "question", "answer"]
 VAL_COLS = ["sentiment", "category"]
+ARROW_SCHEMA = pa.schema([(c, pa.string()) for c in KEY_COLS + VAL_COLS])
 
 # classifier(question, answer) -> struct<sentiment string, category string>
 Classifier = Callable[[Column, Column], Column]
@@ -52,13 +56,15 @@ def load_cache(spark: SparkSession, path: str) -> DataFrame:
     append-only parquet design can), and a duplicated key would fan out
     every later broadcast join. One row per key survives, arbitrarily --
     the same last-write-wins outcome as concurrent reference processes
-    overwriting each other's JSON."""
+    overwriting each other's JSON. The declared schema fixes the column
+    order and spares a footer-reading schema-inference job."""
     try:
         _recover_interrupted_compaction(path)
         if os.path.isdir(path) and any(
             f.endswith(".parquet") for f in os.listdir(path)
         ):
-            return spark.read.parquet(path).dropDuplicates(KEY_COLS)
+            return spark.read.schema(CACHE_SCHEMA).parquet(path) \
+                .dropDuplicates(KEY_COLS)
     except OSError:
         pass
     return spark.createDataFrame([], CACHE_SCHEMA)
@@ -146,14 +152,13 @@ def export_json_cache(spark: SparkSession, cache_path: str,
 def compact_cache(spark: SparkSession, path: str,
                   target_file_bytes: int = 128 << 20) -> int:
     """Rewrite the append-only cache directory as few-files,
-    one-row-per-key parquet. Every run with misses appends one miss
-    partition set (classify_with_cache), so a long-lived cache
-    accumulates small files whose footer reads eventually dominate
-    load_cache planning -- the standard small-files tax, fixed the
-    standard way: periodic compaction (same sizing rule as
-    partitioning.compact_files -- ceil(on-disk bytes / target), one
-    coalesce, no shuffle) plus the dedup-on-key rewrite load_cache
-    applies on read, made durable.
+    one-row-per-key parquet. Every run with misses appends one parquet
+    file (classify_with_cache), so a long-lived cache accumulates small
+    files whose footer reads eventually dominate load_cache planning
+    -- the standard small-files tax, fixed the standard way: periodic
+    compaction (same sizing rule as partitioning.compact_files --
+    ceil(on-disk bytes / target), one coalesce, no shuffle) plus the
+    dedup-on-key rewrite load_cache applies on read, made durable.
 
     Crash-safe swap: the compacted table lands in a sibling ``.tmp``
     directory first, the live directory moves aside, the tmp renames
@@ -225,11 +230,11 @@ def classify_with_cache(
     extending the cache table. Returns KEY_COLS + VAL_COLS for every input
     key. ``keys`` may contain duplicates; they are collapsed first.
 
-    With ``cache_path`` the misses are classified and appended as one
-    atomic parquet write; a run whose keys all hit writes nothing. The
-    result is read back through load_cache, so concurrently-appended
-    duplicate keys collapse to one row. Without it every distinct key
-    is classified lazily in the returned plan.
+    With ``cache_path``, one collect returns hits (through load_cache,
+    so duplicate keys collapse) and classified misses; the misses are
+    appended as one parquet file (none if every key hits) and the result
+    is a DataFrame over the collected rows. Without it every distinct
+    key is classified lazily in the returned plan.
 
     ``max_parallelism`` bounds API-mode concurrency: the miss set is
     repartitioned to that many partitions before the classifier UDF, so at
@@ -240,8 +245,8 @@ def classify_with_cache(
     distinct_keys = keys.select(*KEY_COLS).distinct()
     misses = distinct_keys
     if cache_path:
-        misses = misses.join(load_cache(spark, cache_path), KEY_COLS,
-                             "left_anti")
+        cache = load_cache(spark, cache_path)
+        misses = misses.join(cache, KEY_COLS, "left_anti")
     if max_parallelism is not None:
         misses = misses.repartition(max_parallelism)
     computed = misses.select(
@@ -249,7 +254,14 @@ def classify_with_cache(
     ).select(*KEY_COLS, *[F.col(f"__r.{c}").alias(c) for c in VAL_COLS])
     if not cache_path:
         return computed
-    if not misses.isEmpty():
-        computed.write.mode("append").parquet(cache_path)
-    return load_cache(spark, cache_path).join(
-        distinct_keys, KEY_COLS, "left_semi")
+    hits = cache.join(distinct_keys, KEY_COLS, "left_semi")
+    rows = hits.withColumn("__miss", F.lit(False)).unionByName(
+        computed.withColumn("__miss", F.lit(True))).collect()
+    new = [r.asDict() for r in rows if r["__miss"]]
+    if new:  # one driver-written file, renamed in from a hidden name
+        part = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(cache_path, f".{part}.tmp")
+        os.makedirs(cache_path, exist_ok=True)
+        pq.write_table(pa.Table.from_pylist(new, ARROW_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(cache_path, part))
+    return spark.createDataFrame([r[:-1] for r in rows], CACHE_SCHEMA)

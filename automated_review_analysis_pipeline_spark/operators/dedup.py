@@ -1729,10 +1729,10 @@ def simjoin_append(spark, store_dir: str, new_docs: DataFrame,
     # candidates touching a NEW doc only (a<b canonicalization inside
     # _simjoin_candidates dedupes the new-new overlap); new-old pairs
     # need both orientations because canonicalization is on id order
-    n_store = int(meta.get("n_docs_total",
-                           (meta.get("build_stats") or {})
-                           .get("n_docs", 0)))
-    if n_buckets and n_store == 0:
+    counted = meta.get("n_docs_total",
+                       (meta.get("build_stats") or {}).get("n_docs"))
+    n_store = int(counted or 0)
+    if n_buckets and counted is not None and n_store == 0:
         # stream-start shape: the store side is EMPTY (every streaming
         # lane builds an empty store to freeze the token order, then
         # folds its first micro-batch here), so the new-vs-store join
@@ -1741,7 +1741,9 @@ def simjoin_append(spark, store_dir: str, new_docs: DataFrame,
         # from the first batch of every stream. (Even if a store were
         # deleted down to zero docs, its prefix rows are tombstoned
         # until compaction and exclude_tombstoned below drops their
-        # candidates -- the skip is equivalent either way.)
+        # candidates -- the skip is equivalent either way.) A meta
+        # without either counter says nothing about emptiness, so an
+        # older store takes the generic branch below.
         cand = _simjoin_candidates(new_prefix, new_prefix, threshold)
     elif n_buckets:
         store_prefix = _register_prefix_table(spark, store_dir,

@@ -1647,7 +1647,7 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
     non-increasing, and the fixed points are star forests rooted at
     component minima. Convergence is detected STRUCTURALLY (the edge
     set is a star forest: no child has two parents, no parent is
-    itself a child -- two bounded aggregate actions per round), so
+    itself a child -- one bounded aggregation job per round), so
     correctness never rests on a checksum heuristic. Each round's
     edge set is localCheckpoint'ed (eager) to truncate lineage, and
     the previous round's blocks are released once the new set is

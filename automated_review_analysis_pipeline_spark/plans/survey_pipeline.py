@@ -14,7 +14,8 @@ applies it inline per question column with ``F.lit(question)``;
 :func:`analyze_wide_cached` stacks the cleaned answers into one
 (industry, question, answer) key frame and hands it to
 operators/cache.classify_with_cache -- the single memo-cache
-implementation -- then broadcast-joins each question's results back.
+implementation, one Spark action -- then joins every question back to
+ONE broadcast of the results (one BroadcastExchange, Q-1 reuses).
 
 Plan-construction discipline:
 
@@ -44,7 +45,6 @@ from automated_review_analysis_pipeline_spark.functions.text import (
     sanitize_base,
 )
 from automated_review_analysis_pipeline_spark.operators.cache import (
-    CACHE_SCHEMA,
     Classifier,
     classify_with_cache,
 )
@@ -204,12 +204,12 @@ def analyze_wide_cached(
     """analyze_wide with the reference's memo cache wired in (C7,
     survey_analysis.py:257-273): every distinct non-filler (industry,
     question-header, answer) key is classified ONCE through
-    classify_with_cache -- misses only, one classifier pass with the
-    question as a column, one atomic append -- and each question's
-    results broadcast-join back onto the wide frame. Filler rows never
-    enter the cache (the reference short-circuits BEFORE get_sent_cat,
-    :284-285), and the cache key carries the FULL cleaned answer while
-    only API-bound text is truncated (:259, :264-265).
+    classify_with_cache -- one action: hits and classified misses in one
+    collect, misses appended as one file -- and every question joins
+    back to one broadcast of those results. Filler rows never enter the
+    cache (the reference short-circuits BEFORE get_sent_cat, :284-285),
+    and the cache key carries the FULL cleaned answer while only
+    API-bound text is truncated (:259, :264-265).
 
     This is the plan the CLI runs when a cache path is configured, in
     BOTH modes (the reference consults the cache before VADER too) -- a
@@ -218,9 +218,10 @@ def analyze_wide_cached(
     bounds API-mode concurrency (classify_with_cache repartitions the
     miss set; default: the session's default parallelism).
 
-    The survey's results are collected once on the driver -- the same
-    distinct-key set the broadcasts ship -- so the returned plan holds
-    no cached relation and no reference to the cache files."""
+    The results are the collected distinct-key rows, so the plan holds
+    no cached relation and no reference to the cache files. Every join
+    shares one build side and one key, struct(question, answer): a
+    literal-question key would be pushed into each build side."""
     df, questions, bases, products_col, base_to_display = \
         _staged_clean(survey, id_col)
     # degenerate survey (no question columns past the 3 fixed ones):
@@ -236,25 +237,21 @@ def analyze_wide_cached(
         F.lit(industry).alias("industry"),
         F.stack(F.lit(len(q_names)), *pairs).alias("question", "answer"),
     ).where(~is_filler(F.col("answer")))
-    rows = classify_with_cache(
+    results = F.broadcast(classify_with_cache(
         keys, _api_bound(classifier, max_chars), spark, cache_path,
         max_parallelism or spark.sparkContext.defaultParallelism,
-    ).collect()
-    results = spark.createDataFrame(rows, CACHE_SCHEMA)
+    ).select(F.struct("question", "answer").alias("__key"),
+             F.col("sentiment").alias("__s"), F.col("category").alias("__c")))
 
     for qn, b in zip(q_names, bases):
-        res_b = results.where(F.col("question") == qn).select(
-            F.col("answer").alias(f"{b}_Answer"),
-            F.col("sentiment").alias(f"__s_{b}"),
-            F.col("category").alias(f"__c_{b}"),
-        )
-        df = df.join(F.broadcast(res_b), f"{b}_Answer", "left")
+        df = df.withColumn("__key", F.struct(
+            F.lit(qn).alias("question"),
+            F.col(f"{b}_Answer").alias("answer"),
+        )).join(results, "__key", "left")
         # unmatched = filler (excluded from keys) -> the P3 defaults
         df = df.withColumn(f"__res_{b}", F.struct(
-            F.coalesce(F.col(f"__s_{b}"), F.lit("Neutral"))
-            .alias("sentiment"),
-            F.coalesce(F.col(f"__c_{b}"), F.lit("No Feedback"))
-            .alias("category"),
-        )).drop(f"__s_{b}", f"__c_{b}")
+            F.coalesce("__s", F.lit("Neutral")).alias("sentiment"),
+            F.coalesce("__c", F.lit("No Feedback")).alias("category"),
+        )).drop("__key", "__s", "__c")
 
     return _finalize_wide(df, bases, products_col), base_to_display

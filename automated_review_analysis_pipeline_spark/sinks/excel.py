@@ -1,12 +1,12 @@
 """Excel workbook sink (reference K1-K5, survey_analysis.py:360-446).
 
 Excel is inherently a driver-side, small-data sink (1 048 576-row sheet
-cap), so the wide/summary DataFrames are collect()ed and written with
-xlsxwriter using the reference's exact layout: one data sheet per product
-(ResponseID string-sorted -- the reference's lexicographic quirk, K1/O1),
-a Summary sheet, and a chart sheet per product with per-question pie
-charts (helper blocks at columns 50/51, 2-per-row grid, 480x320, titles
-"<question> – Sentiment Mix (n=total)").
+cap): the wide DataFrame is collect()ed ONCE (its plan and any inline
+classifier UDF run once per report) and the Summary is aggregated from
+those rows. Layout is the reference's: one data sheet per product
+(ResponseID string-sorted, quirk K1/O1), a Summary sheet, and a chart
+sheet per product with per-question pie charts (helper blocks at columns
+50/51, 2-per-row grid, 480x320, "<question> – Sentiment Mix (n=total)").
 
 When xlsxwriter is absent (it is not in this container's baked-in set),
 the sink writes a byte-real workbook through the bundled dependency-free
@@ -46,11 +46,12 @@ def write_excel_report(wide: DataFrame, out_path: str,
     """Write the report; returns the sheet-name inventory (tested against
     the reference's 13-sheet golden layout shape)."""
     base_to_display = base_to_display or {}
-    # (Product, Question) order matches the golden workbook's Summary sheet
-    summary_rows = sorted(summary_from_wide(wide).collect(),
-                          key=lambda r: (r["Product"], r["Question"]))
-    wide_rows = wide.orderBy("ResponseID").collect()
+    wide_rows = wide.collect()
     cols = wide.columns
+    local = wide.sparkSession.createDataFrame(wide_rows, wide.schema)
+    # (Product, Question) order matches the golden workbook's Summary sheet
+    summary_rows = sorted(summary_from_wide(local).collect(),
+                          key=lambda r: (r["Product"], r["Question"]))
 
     per_product = {
         p: sorted(
