@@ -75,9 +75,8 @@ def run(
     """CSV in -> Excel report out; returns the report's sheet names.
 
     Demo mode is fully deterministic end-to-end, like the reference's
-    zero-spend reviewer path (README.md:32). The run owns every block it
-    persists (with_response_id's checkpoint) and releases them once the
-    report is written, so repeated runs in one session hold no memory.
+    zero-spend demo path (README.md:32). The run persists nothing, so
+    repeated runs in one session hold no memory.
 
     With a ``cache`` path the memo cache is consulted and extended in
     BOTH modes, exactly like the reference's get_sent_cat
@@ -92,7 +91,6 @@ def run(
     )
 
     spark = spark or get_spark(app_name="automated-review-analysis-pipeline")
-    held = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     survey = read_survey_csv(spark, input_path)
 
     lang = detect_survey_language(survey)
@@ -121,11 +119,7 @@ def run(
     else:
         wide, base_to_display = analyze_wide(
             survey, classifier=classifier, max_chars=max_chars)
-    sheets = write_excel_report(wide, output, base_to_display)
-    for rdd_id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-        if rdd_id not in held:
-            rdd.unpersist(False)
-    return sheets
+    return write_excel_report(wide, output, base_to_display)
 
 
 def main() -> None:

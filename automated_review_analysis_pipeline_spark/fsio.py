@@ -391,7 +391,8 @@ def write_empty_parquet_fast(spark: SparkSession, dir_path: str,
     each 0-row Spark write still costs a job + FileFormatWriter
     commit (~0.2 s of a measured ~0.8 s empty simjoin build); the
     bytes written here are the same schema-bearing empty footer
-    Spark would leave."""
+    Spark would leave. Like a Spark overwrite, it refreshes every cached
+    read of the path, so none serves the rows just deleted."""
     base = _local_base(spark, dir_path)
     if base is None:
         return False
@@ -417,6 +418,7 @@ def write_empty_parquet_fast(spark: SparkSession, dir_path: str,
         os.path.join(base, f"part-00000-{uuid.uuid4()}-c000"
                            f".snappy.parquet"),
         compression="snappy")
+    spark.catalog.refreshByPath(dir_path)
     return True
 
 
@@ -427,7 +429,8 @@ def reset_bucketed_dir_fast(spark: SparkSession, dir_path: str,
     exactly the layout a 0-partition bucketed saveAsTable produces
     (no data files; readers get their schema from the re-registered
     DDL). Local-FS only, same gate as
-    :func:`write_empty_parquet_fast`."""
+    :func:`write_empty_parquet_fast`, and like it refreshes cached
+    reads of the path."""
     base = _local_base(spark, dir_path)
     if base is None:
         return False
@@ -438,4 +441,5 @@ def reset_bucketed_dir_fast(spark: SparkSession, dir_path: str,
         spark.sql(f"DROP TABLE {table_name}")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
+    spark.catalog.refreshByPath(dir_path)
     return True

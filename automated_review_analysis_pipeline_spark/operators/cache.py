@@ -90,8 +90,9 @@ def import_json_cache(spark: SparkSession, json_path: str,
     keys split on the literal ``|||`` delimiter (answer may itself
     contain anything except the delimiter, same contract as the
     reference's cache_key). Already-imported keys are skipped (anti-join
-    idempotence, like every other cache write). Returns the number of
-    newly imported entries."""
+    idempotence, like every other cache write) and the new entries are
+    appended as one file, none when every key is already present.
+    Returns the number of newly imported entries."""
     import json
 
     with open(json_path, encoding="utf-8") as f:
@@ -105,14 +106,25 @@ def import_json_cache(spark: SparkSession, json_path: str,
         rows.append((parts[0], parts[1], parts[2], str(val[0]), str(val[1])))
     if not rows:
         return 0
-    incoming = spark.createDataFrame(rows, CACHE_SCHEMA).distinct()
-    fresh = incoming.join(load_cache(spark, cache_path), KEY_COLS,
-                          "left_anti").cache()
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(cache_path)
-    fresh.unpersist()
-    return n
+    fresh = spark.createDataFrame(rows, CACHE_SCHEMA).distinct().join(
+        load_cache(spark, cache_path), KEY_COLS, "left_anti").collect()
+    _append(cache_path, [r.asDict() for r in fresh])
+    return len(fresh)
+
+
+def _append(cache_path: str, rows: list[dict]) -> None:
+    """The cache's one writer: ``rows`` become ONE parquet file written
+    on the driver under a hidden temp name that does not end in
+    ``.parquet`` (load_cache and compact_cache skip it), then renamed
+    into place, so a reader sees all of the file or none of it. No rows,
+    no file."""
+    if not rows:
+        return
+    part = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(cache_path, f".{part}.tmp")
+    os.makedirs(cache_path, exist_ok=True)
+    pq.write_table(pa.Table.from_pylist(rows, ARROW_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(cache_path, part))
 
 
 def export_json_cache(spark: SparkSession, cache_path: str,
@@ -257,11 +269,5 @@ def classify_with_cache(
     hits = cache.join(distinct_keys, KEY_COLS, "left_semi")
     rows = hits.withColumn("__miss", F.lit(False)).unionByName(
         computed.withColumn("__miss", F.lit(True))).collect()
-    new = [r.asDict() for r in rows if r["__miss"]]
-    if new:  # one driver-written file, renamed in from a hidden name
-        part = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(cache_path, f".{part}.tmp")
-        os.makedirs(cache_path, exist_ok=True)
-        pq.write_table(pa.Table.from_pylist(new, ARROW_SCHEMA), tmp)
-        os.replace(tmp, os.path.join(cache_path, part))
+    _append(cache_path, [r.asDict() for r in rows if r["__miss"]])
     return spark.createDataFrame([r[:-1] for r in rows], CACHE_SCHEMA)

@@ -171,13 +171,15 @@ def assign_global_ids(df: DataFrame, order_cols: list[str],
     order (append a unique key last) for the ids to be deterministic.
 
     The eager ``localCheckpoint`` between the range exchange and the two
-    jobs that read it is the determinism pin, same as
-    ``with_response_id``: ``repartitionByRange`` samples boundaries with
-    an RDD-id-derived seed, so two separately-planned jobs would draw
-    DIFFERENT boundaries and the count pass would disagree with the
-    numbering pass. Checkpointing materializes the partition map once
-    (MEMORY_AND_DISK blocks -- one extra pass over data the operator
-    already shuffles) and both jobs read the same blocks.
+    jobs that read it is the determinism pin. The count pass and the
+    numbering pass are separate jobs, and ``repartitionByRange`` samples
+    boundaries with an RDD-id-derived seed, so two separately-planned
+    jobs would draw DIFFERENT boundaries and the counts would disagree
+    with the numbering. Checkpointing materializes the partition map
+    once (MEMORY_AND_DISK blocks -- one extra pass over data the
+    operator already shuffles) and both jobs read the same blocks. The
+    pin is the price of not numbering in one task, which is the point
+    of this operator at table scale.
 
     Partitioning on the FULL tuple (not value-width buckets of the
     leading column) is what kills tie skew: a constant leading key or

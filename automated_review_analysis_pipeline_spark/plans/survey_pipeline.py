@@ -5,8 +5,11 @@ row loop): per response, clean each answer, short-circuit filler to
 (Neutral, No Feedback), classify once, then replicate the per-question
 triplets into one output row per product. Here the row loop disappears:
 
-    scan -> clean columns -> classify columns -> explode(products)
-         -> dynamic select list [ResponseID, Product, triplets...]
+    scan -> number rows -> clean columns -> classify columns
+         -> explode(products) -> [ResponseID, Product, triplets...]
+
+Rows are numbered by a window inside the plan (:func:`with_response_id`),
+so neither plan persists anything.
 
 Every classifier follows one contract, ``classifier(question: Column,
 answer: Column) -> struct<sentiment, category>``. :func:`analyze_wide`
@@ -64,47 +67,18 @@ def demo_classifier(question: Column, answer: Column) -> Column:
 def with_response_id(df: DataFrame, id_col: str | None = None) -> DataFrame:
     """ResponseID = str(source row position + 1) (survey_analysis.py:292).
 
-    Callers with a stable key pass ``id_col`` and skip numbering entirely
-    (the preferred path). Without one, this runs the distributed
-    zipWithIndex pattern instead of a global single-partition window: one
-    tiny job counts rows per partition (|partitions| rows to the driver),
-    the cumulative offsets broadcast back, and each partition numbers its
-    own rows locally -- scan order is preserved, nothing ever funnels
-    through one task. Same convention as every other bounded driver
-    collect in this repo: the collected set is |partitions|, not |rows|.
+    Without ``id_col`` rows are numbered in scan order -- partition, then
+    position -- by ``row_number()`` over ``monotonically_increasing_id()``,
+    inside the plan: no extra job and nothing persisted. The window has
+    no partition key, so it runs in one task; a multiLine survey CSV is a
+    non-splittable scan and is already one task. Callers at scale pass
+    ``id_col`` (a stable key) and skip numbering entirely.
     """
     if id_col is not None:
         return df.withColumn("ResponseID", F.col(id_col).cast("string"))
-    from pyspark.sql.functions import broadcast
-
-    # localCheckpoint pins the partitioning: the per-partition counts and
-    # the numbering join below are two separate jobs, and without the
-    # checkpoint a non-deterministic upstream (round-robin repartition,
-    # AQE re-coalescing) could assign rows to different partitions in
-    # each, silently misnumbering. Eager materialization of the staged
-    # frame makes both jobs read the same blocks.
-    staged = df.withColumn("__pid", F.spark_partition_id()) \
-               .withColumn("__mono", F.monotonically_increasing_id()) \
-               .localCheckpoint(eager=True)
-    counts = (staged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-              .orderBy("__pid").collect())
-    offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r["__pid"], acc))
-        acc += r["__n"]
-    spark = df.sparkSession
-    if offsets:
-        off_df = spark.createDataFrame(offsets, "__pid int, __off long")
-    else:
-        off_df = spark.createDataFrame([], "__pid int, __off long")
-    w = Window.partitionBy("__pid").orderBy("__mono")
-    return (
-        staged.join(broadcast(off_df), "__pid")
-        .withColumn(
-            "ResponseID",
-            (F.row_number().over(w) + F.col("__off")).cast("string"))
-        .drop("__pid", "__mono", "__off")
-    )
+    scan_order = Window.orderBy(F.monotonically_increasing_id())
+    return df.withColumn("ResponseID",
+                         F.row_number().over(scan_order).cast("string"))
 
 
 def _staged_clean(survey: DataFrame, id_col: str | None):

@@ -171,3 +171,24 @@ def test_fsio_list_files_relative_recursive(spark, tmp_path):
     got = fsio.list_files(spark, str(tmp_path / "store"))
     assert got == ["part/_SUCCESS", "part/y.parquet", "x.parquet"]
     assert fsio.list_files(spark, str(tmp_path / "nope")) == []
+
+
+@pytest.mark.parametrize("reset", ["write_empty_parquet_fast",
+                                   "reset_bucketed_dir_fast"])
+def test_driver_side_reset_refreshes_cached_reads(spark, tmp_path, reset):
+    """A store part reset on the driver leaves no stale cached read: a
+    .cache()d read of the path taken before the reset returns the reset
+    (empty) state afterwards, as it would after a Spark overwrite."""
+    path = str(tmp_path / "part")
+    spark.range(5).write.parquet(path)
+    cached = spark.read.parquet(path).cache()
+    assert cached.count() == 5
+    try:
+        if reset == "write_empty_parquet_fast":
+            assert fsio.write_empty_parquet_fast(spark, path, cached.schema)
+        else:
+            assert fsio.reset_bucketed_dir_fast(spark, path,
+                                                "fsio_reset_probe")
+        assert cached.count() == 0
+    finally:
+        cached.unpersist()

@@ -127,119 +127,6 @@ def test_finalized_sessions_timeout_eviction(spark, tmp_path):
     ]
 
 
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class _FakeMapState:
-    def __init__(self):
-        self._m = {}
-
-    def containsKey(self, k):
-        return tuple(k) in self._m
-
-    def updateValue(self, k, v):
-        self._m[tuple(k)] = tuple(v)
-
-    def keys(self):
-        return iter(self._m.keys())
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def getMapState(self, name, kschema, vschema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeMapState())
-
-
-def test_tws_profile_kernel_accumulates_across_batches():
-    """The transformWithState processor kernel (ValueState count/sum +
-    MapState distinct types) driven directly against a fake handle: the
-    engine path needs protobuf (absent here), the kernel logic does
-    not."""
-    import pandas as pd
-
-    from automated_review_analysis_pipeline_spark.streaming.stateful_v2 import (
-        UserProfileProcessor,
-    )
-
-    p = UserProfileProcessor()
-    p.init(_FakeHandle())
-    b1 = pd.DataFrame({"value": [1.25, 2.0], "event_type": ["a", "b"]})
-    b2 = pd.DataFrame({"value": [-0.5], "event_type": ["a"]})
-    out1 = list(p.handleInputRows((7,), iter([b1]), None))[0]
-    assert out1["n_events"].iloc[0] == 2
-    assert out1["n_types"].iloc[0] == 2
-    assert out1["sum_value"].iloc[0] == 3.25
-    out2 = list(p.handleInputRows((7,), iter([b2]), None))[0]
-    assert out2["n_events"].iloc[0] == 3            # state carried over
-    assert out2["n_types"].iloc[0] == 2             # 'a' already known
-    assert out2["sum_value"].iloc[0] == 2.75
-
-
-def test_tws_profiles_engine_parity_when_protobuf_present(spark, sf_dir):
-    """Full RocksDB transformWithState drain == batch aggregate; runs
-    only where google.protobuf is importable (not this container)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from automated_review_analysis_pipeline_spark.streaming.events_stream import (
-        read_events_stream,
-    )
-    from automated_review_analysis_pipeline_spark.streaming.stateful_v2 import (
-        user_profiles_tws,
-    )
-    from automated_review_analysis_pipeline_spark.sources.tables import (
-        load_table,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-        ckpt = tempfile.mkdtemp(prefix="tws_test_ckpt_")
-        q = (user_profiles_tws(stream)
-             .writeStream.format("memory").queryName("tws_test")
-             .outputMode("update").trigger(availableNow=True)
-             .option("checkpointLocation", ckpt).start())
-        q.awaitTermination()
-        got = {r["user_id"]: r for r in spark.table("tws_test").collect()}
-        want = {
-            r["user_id"]: r
-            for r in load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"),
-                 F.countDistinct("event_type").alias("n_types"),
-                 F.round(F.sum(F.col("value").cast("decimal(18,6)"))
-                         .cast("double"), 4).alias("sum_value"))
-            .collect()}
-        assert got.keys() == want.keys()
-        for u, w in want.items():
-            g = got[u]
-            assert (g["n_events"], g["n_types"], g["sum_value"]) == \
-                   (w["n_events"], w["n_types"], w["sum_value"]), u
-    finally:
-        spark.conf.unset(provider_key)
-
-
 def test_streaming_asof_matches_batch_asof_across_batches(spark, sf_dir,
                                                           tmp_path):
     """The stateful streaming as-of over REAL time-split micro-batches

@@ -282,3 +282,57 @@ def test_synthetic_survey_datasource(spark):
     out = wide.collect()
     assert len(out) >= 200  # explode fans out multi-product rows
     assert "How_was_your_experience?_Sentiment" in wide.columns
+
+
+@pytest.mark.parametrize("partitions", [None, 7])
+def test_response_id_is_scan_position(spark, tmp_path, partitions):
+    """ResponseID = source row position + 1 (survey_analysis.py:292) on a
+    multiLine CSV whose cells hold quoted newlines, commas and pandas NA
+    tokens, read through read_survey_csv and run through the CLI plan.
+    Each response's Products cell is a unique token, so every wide row
+    names the CSV row it came from. The CSV read is one partition, so
+    its scan position is the csv.reader position. Repartitioned to 7,
+    the scan order is partition then position: the zipWithIndex order
+    of the (pinned) input."""
+    import csv
+
+    from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
+        analyze_wide_cached,
+        demo_classifier,
+    )
+    from automated_review_analysis_pipeline_spark.sources.survey import (
+        PANDAS_NA_TOKENS,
+        read_survey_csv,
+    )
+
+    path = str(tmp_path / "survey.csv")
+    with open(path, "w", newline="", encoding="utf-8") as f:
+        w = csv.writer(f)
+        w.writerow(["Email", "Name", "Products", "Q1, the fit", "Q2"])
+        for i in range(1200):
+            na = PANDAS_NA_TOKENS[i % len(PANDAS_NA_TOKENS)]
+            w.writerow([
+                f"u{i}@x.com", f"Doe, J{i}",
+                f"P{i}, R{i}" if i % 3 else f"P{i}",
+                na if i % 4 == 0 else f'love it, "{i}"\nsecond line',
+                f"line one\r\nline, two {i}" if i % 5 else na,
+            ])
+    with open(path, newline="", encoding="utf-8") as f:
+        expected = {r[2].split(",")[0]: pos + 1
+                    for pos, r in enumerate(list(csv.reader(f))[1:])}
+
+    survey = read_survey_csv(spark, path)
+    if partitions:
+        survey = survey.repartition(partitions).localCheckpoint()
+        assert survey.rdd.getNumPartitions() == partitions
+        expected = {r["Products"].split(",")[0]: n + 1
+                    for r, n in survey.rdd.zipWithIndex().collect()}
+    wide, _ = analyze_wide_cached(survey, demo_classifier, "retail",
+                                  str(tmp_path / "cache"))
+    rows = wide.collect()
+    assert len(rows) == 1200 + 800
+    got = {}
+    for r in rows:
+        token = r["Product"].replace("R", "P")
+        assert got.setdefault(token, r["ResponseID"]) == r["ResponseID"]
+    assert got == {p: str(n) for p, n in expected.items()}
