@@ -675,14 +675,24 @@ def shuffle_shards(documents: DataFrame, n_shards: int = 8,
     Plan: the shuffle key is md5(seed-id) (the portable hash used by the
     split/quota operators); the shard is the key's first 8 hex digits mod
     ``n_shards`` (uniform, no coordination), and the in-shard position is
-    a row_number per shard ordered by (key, id). Only (id, key, shard)
-    triples ever shuffle -- document payloads are joined back by the
-    writer at shard granularity. Size n_shards to the cluster (hundreds+
-    at 100 TB) so the per-shard sort stays partition-local.
+    a row_number per shard ordered by (key, id). Rows hash-partition on
+    the shard into ``n_shards`` partitions and the position window runs
+    on that partitioning, so one exchange places each row; the shard
+    writer runs the same assignment with the document text carried
+    through it. Size n_shards to the cluster (hundreds+ at 100 TB) so
+    the per-shard sort stays partition-local.
     """
+    return _shard_assign(documents, n_shards, seed, id_col) \
+        .orderBy("shard", "pos")
+
+
+def _shard_assign(documents: DataFrame, n_shards: int, seed: str,
+                  id_col: str, *carry: str) -> DataFrame:
+    """:func:`shuffle_shards`' (id, *carry*, shard, pos) rows, unordered,
+    hash-partitioned on the shard."""
     key = F.md5(F.concat_ws("-", F.lit(seed), F.col(id_col).cast("string")))
     staged = documents.select(
-        F.col(id_col), key.alias("__key"),
+        F.col(id_col), *carry, key.alias("__key"),
     ).withColumn(
         "shard",
         F.pmod(F.conv(F.substring(F.col("__key"), 1, 8), 16, 10)
@@ -690,9 +700,9 @@ def shuffle_shards(documents: DataFrame, n_shards: int = 8,
     )
     w = Window.partitionBy("shard").orderBy("__key", id_col)
     return (
-        staged.withColumn("pos", F.row_number().over(w))
-        .select(id_col, "shard", "pos")
-        .orderBy("shard", "pos")
+        staged.repartition(n_shards, "shard")
+        .withColumn("pos", F.row_number().over(w))
+        .drop("__key")
     )
 
 

@@ -18,6 +18,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
@@ -44,11 +45,26 @@ class _jd:
         self._sc.setJobDescription(self._prev)
 
 
+# a shuffle exchange node in a physical-plan string; Broadcast- and
+# ReusedExchange do not match
+_SHUFFLE_EXCHANGE = re.compile(r"(?<![A-Za-z])Exchange ")
+
+
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition UP to the session's parallelism when the input arrived
     under-partitioned (a small parquet file reads as ONE partition -- fatal
     for the CPU-bound hashing below). Inputs that already have enough
-    partitions (the 100 TB case) pass through untouched: no extra shuffle."""
+    partitions (the 100 TB case) pass through untouched: no extra shuffle.
+
+    The physical plan decides first. An input whose plan already holds
+    a shuffle exchange keeps its partitioning, and no Spark job runs:
+    AQE sizes that exchange at run time, and counting its partitions
+    would run it -- and everything upstream -- just to probe.
+    Only an input without one is probed; for a scan, possibly filtered
+    or projected, that probe lists its file splits and runs nothing."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if _SHUFFLE_EXCHANGE.search(plan):
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *cols) if cols else df.repartition(target)
@@ -1605,10 +1621,9 @@ def simjoin_delete(spark, store_dir: str, doc_ids,
     docs_tbl = (_register_docs_table(spark, store_dir, docs_buckets)
                 if docs_buckets
                 else spark.read.parquet(store_dir + "/docs"))
-    ids = store_delete.as_id_frame(spark, doc_ids, docs_tbl, "id")
-    if store_delete.has_tombstones(meta):
-        ids = ids.join(store_delete.read_tombstones(spark, store_dir),
-                       "id", "left_anti")
+    ids = store_delete.exclude_tombstoned(
+        store_delete.as_id_frame(spark, doc_ids, docs_tbl, "id"),
+        spark, store_dir, meta, ("id",))
     new_ts = ids.localCheckpoint(eager=True)
     # bounded-IN pruned presence count (the verify stage's IN-lane
     # discipline): a delete is |ids|-sized, never an O(store) scan

@@ -570,14 +570,15 @@ def index_compact(spark: SparkSession, store_dir: str,
     ts_dir = fsio.join(store_dir, store_delete.TOMBSTONE_PART)
     purging = (store_delete.has_tombstones(meta)
                or fsio.exists(spark, ts_dir))
-    ts = (store_delete.read_tombstones(spark, store_dir)
-          if purging and fsio.exists(spark, ts_dir) else None)
+    has_ts = purging and fsio.exists(spark, ts_dir)
 
     def drop_ids(*cols: str):
-        if ts is None:
+        if not has_ts:
             return None
 
         def t(df):
+            ts = store_delete.read_tombstones(
+                spark, store_dir, df.schema[cols[0]].dataType.simpleString())
             for c in cols:
                 df = df.join(
                     F.broadcast(ts.select(F.col("id").alias(c))),

@@ -1091,10 +1091,9 @@ def ivfpq_index_delete(spark, store_dir: str, vec_ids,
             and batch_id <= meta.get("last_delete_batch_id", -1):
         return meta
     codes = spark.read.parquet(store_dir + "/codes")
-    ids = store_delete.as_id_frame(spark, vec_ids, codes, "c_id")
-    if store_delete.has_tombstones(meta):
-        ids = ids.join(store_delete.read_tombstones(spark, store_dir),
-                       "id", "left_anti")
+    ids = store_delete.exclude_tombstoned(
+        store_delete.as_id_frame(spark, vec_ids, codes, "c_id"),
+        spark, store_dir, meta, ("id",))
     new_ts = ids.localCheckpoint(eager=True)
     return store_delete.append_tombstones(
         spark, store_dir, new_ts, meta, batch_id=batch_id)
@@ -1136,11 +1135,8 @@ def ivfpq_rebuild(spark, store_dir: str, embeddings: DataFrame,
             f"{store_dir} predates the round-15 self-describing meta "
             f"(no build recipe recorded); rebuild it once with "
             f"build_ivfpq_index to enable ivfpq_rebuild")
-    corpus = embeddings
-    if store_delete.has_tombstones(meta):
-        ts = store_delete.read_tombstones(spark, store_dir)
-        corpus = corpus.join(
-            ts.select(F.col("id").alias(id_col)), id_col, "left_anti")
+    corpus = store_delete.exclude_tombstoned(
+        embeddings, spark, store_dir, meta, (id_col,))
     tmp = store_dir.rstrip("/") + ".__rebuild__"
     fsio.delete(spark, tmp)
     build_ivfpq_index(

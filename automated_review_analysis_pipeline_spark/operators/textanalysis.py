@@ -2015,6 +2015,15 @@ def _bm25_postings_table_name(store_dir: str) -> str:
             + hashlib.md5(store_dir.encode("utf-8")).hexdigest()[:12])
 
 
+def _bm25_doclen(spark, store_dir: str, postings_cols: str) -> DataFrame:
+    """The ``doclen/`` part, read with the schema the postings DDL
+    implies (its first column is the doc id): no schema-inference
+    job."""
+    id_field = postings_cols.split(",")[0]
+    return spark.read.schema(f"{id_field}, `dl` bigint") \
+        .parquet(store_dir + "/doclen")
+
+
 def _bm25_words(documents: DataFrame, id_col: str,
                 text_col: str) -> DataFrame:
     """The exact tokenization bm25_search scores over (lowercased
@@ -2089,7 +2098,7 @@ def build_bm25_index(documents: DataFrame, store_dir: str,
     write_bucketed_path(postings, store_dir + "/postings", name, cols,
                         ["word"], ["word"], n_buckets, "overwrite")
     dl.write.mode("overwrite").parquet(store_dir + "/doclen")
-    stats = spark.read.parquet(store_dir + "/doclen").agg(
+    stats = _bm25_doclen(spark, store_dir, cols).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")).first()
     fsio.write_json(spark, fsio.join(store_dir, "meta.json"),
                     {"n_docs": int(stats["n"] or 0),
@@ -2131,11 +2140,10 @@ def bm25_index_delete(spark, store_dir: str, doc_ids,
     if batch_id is not None \
             and batch_id <= meta.get("last_delete_batch_id", -1):
         return meta
-    dl = spark.read.parquet(store_dir + "/doclen")
-    ids = store_delete.as_id_frame(spark, doc_ids, dl, id_col)
-    if store_delete.has_tombstones(meta):
-        ids = ids.join(store_delete.read_tombstones(spark, store_dir),
-                       "id", "left_anti")
+    dl = _bm25_doclen(spark, store_dir, meta["postings_cols"])
+    ids = store_delete.exclude_tombstoned(
+        store_delete.as_id_frame(spark, doc_ids, dl, id_col),
+        spark, store_dir, meta, ("id",))
     new_ts = ids.localCheckpoint(eager=True)
     hit = (dl.join(F.broadcast(new_ts.select(
         F.col("id").alias(id_col))), id_col)
@@ -2248,7 +2256,7 @@ def bm25_index_search(spark, store_dir: str, query_terms: tuple[str, ...],
                 F.col("tf").cast("double").alias("__tf"))
     df_ = tf.groupBy("word").agg(
         F.count(F.lit(1)).cast("double").alias("__df"))
-    dl = spark.read.parquet(store_dir + "/doclen").select(
+    dl = _bm25_doclen(spark, store_dir, meta["postings_cols"]).select(
         id_col, F.col("dl").cast("double").alias("__dl"))
     n_docs = float(meta["n_docs"])
     total_len = float(meta["total_len"])
@@ -2324,7 +2332,7 @@ def bm25_index_topk(spark, store_dir: str, queries: DataFrame,
                         F.col("tf").cast("double").alias("tf"))
     df_ = tf.groupBy("word").agg(
         F.count(F.lit(1)).cast("double").alias("df"))
-    dl = spark.read.parquet(store_dir + "/doclen").select(
+    dl = _bm25_doclen(spark, store_dir, meta["postings_cols"]).select(
         id_col, F.col("dl").cast("double").alias("dl"))
     n_docs = float(meta["n_docs"])
     avgdl_expr = (F.lit(float(meta["total_len"])) / F.lit(n_docs))

@@ -10,12 +10,13 @@ the document count, token mass, and an order-independent content
 fingerprint (the md5-xor discipline of quality.table_fingerprint).
 
 The manifest is what makes the hand-off auditable at 100 TB: the
-loader (or :func:`read_training_shards`) recomputes the same three
-numbers from the bytes it read and refuses to train on a short,
-corrupt, or stale delivery. Everything here is one hash aggregate at
-scan parallelism -- one (shard, count, sum, xor) row per shard crosses
-the shuffle; document payloads move once, repartitioned to shard
-granularity for the write.
+writer builds it from the rows it just wrote, and the loader (or
+:func:`read_training_shards`) recomputes the same three numbers from
+the bytes it read and refuses to train on a short, corrupt, or stale
+delivery. Both are one hash aggregate at scan parallelism -- one
+(shard, count, sum, xor) row per shard crosses the shuffle. The input
+runs once: its rows, payloads included, move in one exchange to shard
+granularity, and the position window runs on that partitioning.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark.operators.curation import (
-    shuffle_shards,
+    _shard_assign,
 )
 from automated_review_analysis_pipeline_spark.operators.textanalysis import (
     token_count,
@@ -51,33 +52,34 @@ def _row_hash(id_col: str, text_col: str) -> F.Column:
     ).cast("long")
 
 
-def _assigned(documents: DataFrame, n_shards: int, seed: str,
-              id_col: str, text_col: str) -> DataFrame:
-    assign = shuffle_shards(documents, n_shards, seed, id_col)
-    return documents.select(id_col, text_col).join(assign, id_col)
-
-
-def shard_manifest(documents: DataFrame, n_shards: int = 8,
-                   seed: str = "epoch0", id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """(shard, n_docs, n_tokens, fingerprint) over the deterministic
-    shuffle assignment -- computable BEFORE writing (this is what gets
-    persisted as manifest.json) and recomputable from a read-back
-    (validation). Pure aggregate: one row per shard leaves the map side.
-    """
-    j = _assigned(documents, n_shards, seed, id_col, text_col)
+def _shard_stats(rows: DataFrame, id_col: str,
+                 text_col: str) -> DataFrame:
+    """(shard, n_docs, n_tokens, fingerprint) of (shard, pos, id, text)
+    rows, unordered: the one aggregate behind the manifest, whether the
+    rows are about to be written, were just written, or were read back.
+    Pure aggregate: one row per shard leaves the map side."""
     return (
-        j.select("shard",
-                 _row_hash(id_col, text_col).alias("__h"),
-                 token_count(F.col(text_col)).alias("__t"))
+        rows.select("shard",
+                    _row_hash(id_col, text_col).alias("__h"),
+                    token_count(F.col(text_col)).alias("__t"))
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("__t").alias("n_tokens"),
             F.expr("bit_xor(__h)").alias("fingerprint"),
         )
-        .orderBy("shard")
     )
+
+
+def shard_manifest(documents: DataFrame, n_shards: int = 8,
+                   seed: str = "epoch0", id_col: str = "doc_id",
+                   text_col: str = "text") -> DataFrame:
+    """(shard, n_docs, n_tokens, fingerprint) over the deterministic
+    shuffle assignment -- computable BEFORE writing, and equal to the
+    manifest.json the writer builds from the rows it wrote."""
+    return _shard_stats(
+        _shard_assign(documents, n_shards, seed, id_col, text_col),
+        id_col, text_col).orderBy("shard")
 
 
 def write_training_shards(documents: DataFrame, out_dir: str,
@@ -87,18 +89,20 @@ def write_training_shards(documents: DataFrame, out_dir: str,
     """Write ``out_dir/shards/shard=K/*.parquet`` (rows position-ordered
     within each shard) and ``out_dir/manifest.json``; returns the
     manifest dict. Deterministic end-to-end: same corpus + seed ->
-    identical assignment, identical manifest."""
-    data = _assigned(documents, n_shards, seed, id_col, text_col)
+    identical assignment, identical manifest. ``documents`` runs once:
+    the manifest aggregates the rows just written, not the input."""
+    data = _shard_assign(documents, n_shards, seed, id_col, text_col)
+    path = out_dir + "/shards"
     # sort by (shard, pos): the dynamic-partition writer requires an
     # ordering on the partition column -- providing it as the sort
     # prefix keeps the pos order instead of letting the writer re-sort
     # on shard alone
-    (data.repartition(n_shards, "shard")
-     .sortWithinPartitions("shard", "pos")
-     .write.mode("overwrite").partitionBy("shard")
-     .parquet(out_dir + "/shards"))
-    rows = shard_manifest(documents, n_shards, seed,
-                          id_col, text_col).collect()
+    (data.sortWithinPartitions("shard", "pos")
+     .write.mode("overwrite").partitionBy("shard").parquet(path))
+    spark = documents.sparkSession
+    written = spark.read.schema(data.schema).parquet(path)
+    rows = sorted(_shard_stats(written, id_col, text_col).collect(),
+                  key=lambda r: r["shard"])
     manifest = {
         "seed": seed,
         "n_shards": n_shards,
@@ -114,8 +118,7 @@ def write_training_shards(documents: DataFrame, out_dir: str,
     # crash before this line leaves no manifest, so read_training_shards
     # fails fast instead of validating a half-delivery
     from .. import fsio
-    fsio.write_text(documents.sparkSession,
-                    fsio.join(out_dir, "manifest.json"),
+    fsio.write_text(spark, fsio.join(out_dir, "manifest.json"),
                     json.dumps(manifest, indent=1, sort_keys=True))
     return manifest
 
@@ -155,15 +158,7 @@ def read_training_shards(spark: SparkSession, out_dir: str,
         id_col, text_col = manifest["id_col"], manifest["text_col"]
         got = {
             r["shard"]: (r["n_docs"], r["n_tokens"], r["fingerprint"])
-            for r in (
-                df.select("shard",
-                          _row_hash(id_col, text_col).alias("__h"),
-                          token_count(F.col(text_col)).alias("__t"))
-                .groupBy("shard")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.sum("__t").alias("n_tokens"),
-                     F.expr("bit_xor(__h)").alias("fingerprint"))
-                .collect())
+            for r in _shard_stats(df, id_col, text_col).collect()
         }
         want = {s["shard"]: (s["n_docs"], s["n_tokens"], s["fingerprint"])
                 for s in manifest["shards"]}

@@ -51,21 +51,28 @@ def as_id_frame(spark: SparkSession, ids, ref: DataFrame,
                 ref_col: str) -> DataFrame:
     """Normalize a delete request (python list/tuple/set or a
     one-column DataFrame) to a distinct single-column frame named
-    ``id`` with *ref_col*'s type from *ref*."""
+    ``id`` with *ref_col*'s type from *ref*. A python collection
+    becomes a literal array exploded on the JVM: no pickled rows, so
+    a delete starts no Python worker."""
     id_type = ref.schema[ref_col].dataType.simpleString()
     if isinstance(ids, DataFrame):
         col = ids.columns[0]
         out = ids.select(F.col(col).cast(id_type).alias("id"))
     else:
-        out = spark.createDataFrame(
-            [(i,) for i in ids], f"id {id_type}")
+        arr = F.array(*(F.lit(i) for i in ids)).cast(f"array<{id_type}>")
+        out = spark.range(1, numPartitions=1).select(
+            F.explode(arr).alias("id"))
     return out.distinct()
 
 
-def read_tombstones(spark: SparkSession, store_dir: str) -> DataFrame:
+def read_tombstones(spark: SparkSession, store_dir: str,
+                    id_type: str) -> DataFrame:
     """The live tombstoned-id set (distinct; the part may carry
-    value-duplicates from replayed deletes)."""
-    return (spark.read.parquet(tombstones_path(store_dir))
+    value-duplicates from replayed deletes). *id_type* is the store's
+    id type, which the tombstones were written with: the read needs
+    no schema-inference job."""
+    return (spark.read.schema(f"id {id_type}")
+            .parquet(tombstones_path(store_dir))
             .select("id").distinct())
 
 
@@ -77,7 +84,8 @@ def exclude_tombstoned(df: DataFrame, spark: SparkSession,
     No-op (and no plan nodes) when the store has no tombstones."""
     if not has_tombstones(meta):
         return df
-    ts = read_tombstones(spark, store_dir)
+    ts = read_tombstones(spark, store_dir,
+                         df.schema[cols[0]].dataType.simpleString())
     for c in cols:
         df = df.join(ts.select(F.col("id").alias(c)), c, "left_anti")
     return df
@@ -95,7 +103,8 @@ def check_not_tombstoned(new_ids: DataFrame, spark: SparkSession,
     tombstones exist."""
     if not has_tombstones(meta):
         return
-    ts = read_tombstones(spark, store_dir)
+    ts = read_tombstones(spark, store_dir,
+                         new_ids.schema[id_col].dataType.simpleString())
     clash = (new_ids.select(F.col(id_col).alias("id")).distinct()
              .join(ts, "id").limit(5).collect())
     if clash:

@@ -147,7 +147,7 @@ def test_simjoin_delete_kill_mid_fault_injection(
     assert _rows(dedup.simjoin_pairs(spark, store)) == pairs_before
     # retry (same replay id): rolls back + folds exactly once
     got = dedup.simjoin_delete(spark, store, victims, batch_id=3)
-    ts = store_delete.read_tombstones(spark, store)
+    ts = store_delete.read_tombstones(spark, store, "bigint")
     assert ts.count() == len(victims)
     # the rollback removed the orphan files: no value-duplicates
     assert spark.read.parquet(store + "/tombstones").count() \
@@ -203,12 +203,22 @@ def _bm25_store(spark, sf_dir, tmp_path):
     return docs, store
 
 
+@pytest.mark.parametrize("kind", ["list", "tuple", "set", "frame", "empty"])
 def test_bm25_delete_equals_one_shot_over_survivors(
-        spark, sf_dir, tmp_path):
+        spark, sf_dir, tmp_path, kind):
+    """Every delete-request shape gives the same tombstones and counters
+    (an empty list deletes nothing), and a python collection becomes a
+    JVM-side frame: no pickled LogicalRDD, so no Python worker."""
     docs, store = _bm25_store(spark, sf_dir, tmp_path)
     hits = ta.bm25_index_search(spark, store, QUERY, k=5).collect()
-    victims = [r["doc_id"] for r in hits[:2]]
-    ta.bm25_index_delete(spark, store, victims)
+    victims = [] if kind == "empty" else [r["doc_id"] for r in hits[:2]]
+    request = {"tuple": tuple, "set": set,
+               "frame": lambda v: spark.createDataFrame(
+                   [(i,) for i in v], "victim bigint")
+               }.get(kind, list)(victims)
+    ta.bm25_index_delete(spark, store, request)
+    assert sorted(r["id"] for r in spark.read.parquet(
+        store + "/tombstones").collect()) == sorted(victims)
     survivors = docs.where(~F.col("doc_id").isin(victims))
     got = ta.bm25_index_search(spark, store, QUERY, k=20)
     want = ta.bm25_search(survivors, QUERY, k=20)
@@ -218,6 +228,13 @@ def test_bm25_delete_equals_one_shot_over_survivors(
     wl = ta._bm25_words(survivors, "doc_id", "text")
     assert meta["n_docs"] == wl.select("doc_id").distinct().count()
     assert meta["total_len"] == wl.count()
+    assert meta["n_tombstoned"] == len(victims)
+    if kind != "frame":
+        ids = store_delete.as_id_frame(
+            spark, request, docs.select("doc_id"), "doc_id")
+        assert ids.schema["id"].dataType.simpleString() == "bigint"
+        plan = ids._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, plan
 
 
 def test_bm25_topk_respects_tombstones(spark, sf_dir, tmp_path):
