@@ -85,7 +85,7 @@ def leakage_safe_split(embeddings: DataFrame, threshold: float = 0.35,
 
     Composition, not new machinery: connected components over the
     cosine>=threshold graph (similarity.near_dup_components -- banded
-    sign-LSH candidates, min-label clusters) produce a deterministic
+    sign-LSH candidates, min-id components) produce a deterministic
     ``component`` representative per vector, and the standard
     ``split_label`` hash is applied to the COMPONENT id instead of the
     row id. Every member inherits its cluster's draw, split fractions
@@ -101,9 +101,10 @@ def leakage_safe_split(embeddings: DataFrame, threshold: float = 0.35,
     representative-hash scheme cannot fix this in general, because ANY
     cluster-derived label changes when clusters merge.
 
-    Scale: inherits near_dup_components' bounds (distributed min-label
-    propagation above the edge bound); the split itself is a narrow
-    per-row expression on the component column -- no extra shuffle.
+    Scale: inherits near_dup_components' bounds (driver union-find up to
+    the edge bound, large-star/small-star rounds above it); the split
+    itself is a narrow per-row expression on the component column -- no
+    extra shuffle.
     """
     from .similarity import near_dup_components
 
@@ -377,8 +378,8 @@ def bloom_decontaminate(documents: DataFrame, text_col: str = "text",
     Below ``min_corpus_docs`` the operator auto-flips to the plain exact
     join (:func:`decontaminate`): at small scale the prefilter's fixed
     costs (bitset build action, per-shingle position math, the probe)
-    exceed what it saves, exactly like near_dup_components' edge-count
-    flip. Output is byte-identical on both paths by contract, so the
+    exceed what it saves, exactly like star_connected_components' edge-
+    count switch. Output is byte-identical on both paths by contract, so the
     flip can never change an answer; pass ``min_corpus_docs=0`` to force
     the Bloom path (tests do, pinning bloom == exact equality).
     """

@@ -1617,21 +1617,36 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.8,
     )
 
 
+# Canonical edge sets of at most this many edges are labelled on the
+# driver: one collect and a union-find cost a fixed few jobs, where every
+# star round costs several however small the graph is.
+MAX_COLLECT_EDGES = 1_000_000
+
+
 def star_connected_components(edges: DataFrame, a_col: str = "a",
                               b_col: str = "b",
                               max_iterations: int = 50,
                               plan_sink: list | None = None,
                               ) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star connected components over an
-    arbitrary edge list (Kiveris, Lattanzi, Mirrokni, Rastogi,
-    Vassilvitskii: "Connected Components in MapReduce and Beyond",
-    SoCC 2014) -- the 100 TB path for dedup clustering.
+    """Connected components over an arbitrary edge list: every node that
+    appears in an edge is labelled with the smallest node id it can
+    reach. The package's one connected-components implementation, with
+    one size switch.
 
-    Every stage is a keyed groupBy/join that shards across executors:
-    NO coalesce(1), NO driver-side edge materialization, and the round
-    count is O(log^2 n) in theory and ~log(diameter) in practice,
-    versus O(diameter) for plain min-label propagation (a 1M-long
-    near-dup chain needs ~1M min-label rounds but ~20 star rounds).
+    The edges are canonicalised (a > b, no self-loops, distinct) and
+    localCheckpoint'ed once, then counted. At most
+    :data:`MAX_COLLECT_EDGES` edges collect to the driver, where a
+    union-find labels them; the labels come back as an Arrow-built frame
+    with the edge columns' type (no Python worker) and ``rounds`` is 0.
+    Above the bound, alternating large-star/small-star rounds run
+    (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii: "Connected
+    Components in MapReduce and Beyond", SoCC 2014) -- the 100 TB path.
+
+    Every star stage is a keyed groupBy/join that shards across
+    executors (no coalesce(1)), and the round count is O(log^2 n) in
+    theory and ~log(diameter) in practice, versus O(diameter) for plain
+    min-label propagation (a 1M-long near-dup chain needs ~1M min-label
+    rounds but ~20 star rounds).
 
     Per round:
       large-star  -- every node u computes m = min(neighbors + self)
@@ -1658,7 +1673,7 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
     Returns (labels, rounds): labels has columns (node, component)
     covering every node that appears in any edge; isolated nodes are
     the caller's left-join + coalesce. ``plan_sink`` (tests) receives
-    each round's physical plan string so plan gates can assert the
+    each star round's physical plan string so plan gates can assert the
     loop itself -- not just the final join -- is coalesce-free.
     """
     E = (
@@ -1669,6 +1684,32 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
         .distinct()
         .localCheckpoint(eager=True)
     )
+    if E.count() <= MAX_COLLECT_EDGES:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = _star_labels(E).schema  # both sides return one schema
+        edge_rows = E.collect()
+        E.unpersist()
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for r in edge_rows:
+            a, b = r[0], r[1]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        table = pa.table({"node": list(parent),
+                          "component": [find(n) for n in parent]},
+                         schema=to_arrow_schema(schema))
+        return edges.sparkSession.createDataFrame(table, schema), 0
     rounds = 0
     for _ in range(max_iterations):
         # structural convergence: star forest reached? BOTH conditions
@@ -1733,13 +1774,18 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
         raise RuntimeError(
             f"star_connected_components did not converge within "
             f"{max_iterations} rounds")
-    labels = (
+    return _star_labels(E), rounds
+
+
+def _star_labels(E: DataFrame) -> DataFrame:
+    """(node, component) of a star forest of canonical (a > b) edges:
+    every child labelled with its root, every root with itself."""
+    return (
         E.select(F.col("a").alias("node"), F.col("b").alias("component"))
         .union(E.select(F.col("b").alias("node"),
                         F.col("b").alias("component")))
         .distinct()
     )
-    return labels, rounds
 
 
 def build_components_store(edges: DataFrame, store_dir: str,
@@ -2070,124 +2116,22 @@ def components_vacuum(spark, store_dir: str, keep: int = 1) -> list[int]:
 
 def near_dup_components(embeddings: DataFrame, threshold: float = 0.35,
                         id_col: str = "vec_id",
-                        distributed: bool | None = None,
-                        max_iterations: int = 25,
-                        max_collect_edges: int = 1_000_000,
-                        algorithm: str = "star") -> DataFrame:
+                        max_iterations: int = 25) -> DataFrame:
     """Connected components over the near-duplicate graph: every vector
     labeled with the MIN id reachable through cosine->=threshold edges --
     the cluster assignment that turns pair evidence into dedup groups
     (keep one representative per component, not per pair).
 
-    Path selection (``distributed=None``, the default): count the edges
-    first -- at or below ``max_collect_edges`` the edge list collects to
-    the driver, a union-find labels it exactly, and the mapping broadcasts
-    back as one join (two Spark actions total; mirrors cosine_topk's
-    collect-the-small-side discipline -- NOT a driver loop over data).
-    Above the bound it flips automatically to the distributed
-    ``algorithm``: ``"star"`` (default) is alternating large-star/
-    small-star via :func:`star_connected_components` -- every stage a
-    keyed join/aggregate that shards, ~log(diameter) rounds, no
-    coalesce(1), the genuine 100 TB path; ``"minlabel"`` is the
-    O(diameter) min-label propagation kept as a third independent
-    cross-check regime (it deliberately coalesces the tiny test-scale
-    subgraph to one partition to make its per-round aggregate cheap --
-    do NOT use it at cluster scale). ``distributed=True/False`` forces
-    a side.
-
-    Deterministic all three ways: the component label is the min id
+    The banded pair generator feeds :func:`star_connected_components`
+    (driver union-find for small edge sets, star rounds above
+    :data:`MAX_COLLECT_EDGES`); one left join labels the isolated
+    vectors with themselves. The component label is the min id
     reachable, order- and partitioning-independent, so the result has
     an exact recursive-CTE oracle.
     """
-    pairs = pairwise_cosine_above(embeddings, threshold, id_col).cache()
-    if distributed is None:
-        distributed = pairs.count() > max_collect_edges
-
-    if not distributed:
-        edge_rows = pairs.select("id_a", "id_b").collect()
-        pairs.unpersist()
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in edge_rows:
-            a, b = r[0], r[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        mapping = [(n, find(n)) for n in parent]
-        spark = embeddings.sparkSession
-        if mapping:
-            map_df = spark.createDataFrame(
-                mapping, "node long, component long")
-        else:
-            map_df = spark.createDataFrame([], "node long, component long")
-        out = embeddings.select(F.col(id_col).alias("node")).join(
-            broadcast(map_df), "node", "left")
-        return out.select(
-            F.col("node").alias(id_col),
-            F.coalesce(F.col("component"), F.col("node")).alias("component"),
-        ).orderBy(id_col)
-
-    if algorithm == "star":
-        labels, _rounds = star_connected_components(
-            pairs, a_col="id_a", b_col="id_b",
-            max_iterations=max_iterations)
-        pairs.unpersist()
-        out = embeddings.select(F.col(id_col).alias("node")).join(
-            labels, "node", "left")
-        return out.select(
-            F.col("node").alias(id_col),
-            F.coalesce(F.col("component"),
-                       F.col("node")).alias("component"),
-        ).orderBy(id_col)
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown components algorithm: {algorithm!r}")
-
-    # Min-label propagation cross-check regime: O(diameter) rounds with
-    # a sum-based convergence check (one aggregate action per round).
-    # coalesce(1) because this mode only runs on tiny test-scale
-    # subgraphs as the independent third implementation; the scale path
-    # is algorithm="star" above.
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"),
-                            F.col("id_a").alias("dst")))
-    ).coalesce(1).cache()
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .select("node", F.col("node").alias("component"))
-    ).coalesce(1).cache()
-    prev_sum = None
-    for _ in range(max_iterations):
-        neigh = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("component").alias("__nc"))
-        )
-        new_labels = (
-            labels.join(neigh, labels["node"] == neigh["src"], "left")
-            .select(
-                "node",
-                F.least(F.col("component"),
-                        F.coalesce(F.col("__nc"), F.col("component")))
-                .alias("component"),
-            )
-        ).coalesce(1).cache()
-        new_sum = new_labels.agg(F.sum("component")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    pairs.unpersist()
+    pairs = pairwise_cosine_above(embeddings, threshold, id_col)
+    labels, _rounds = star_connected_components(
+        pairs, a_col="id_a", b_col="id_b", max_iterations=max_iterations)
     out = embeddings.select(F.col(id_col).alias("node")).join(
         labels, "node", "left")
     return out.select(
@@ -2412,10 +2356,10 @@ def near_dup_pagerank(embeddings: DataFrame, threshold: float = 0.35,
     lineage; 5 rounds does not need it.
     """
     pairs = pairwise_cosine_above(embeddings, threshold, id_col)
-    # coalesce(1): the near-dup subgraph is bounded by construction (same
-    # convention as near_dup_components' distributed path) -- 5 rounds of
-    # 32-partition shuffles on a 200-row frame is pure scheduling
-    # overhead. At cluster scale remove it and the identical plan shards.
+    # coalesce(1): the near-dup subgraph is bounded by construction -- 5
+    # rounds of 32-partition shuffles on a 200-row frame is pure
+    # scheduling overhead. At cluster scale remove it and the identical
+    # plan shards.
     edges = plan_cache((
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"),

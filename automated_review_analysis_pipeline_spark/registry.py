@@ -6848,7 +6848,7 @@ FROM reach GROUP BY src ORDER BY doc_id
 """
 
 # the streaming lane accumulates the SAME pair set (exactly-once per
-# pair) and folds it into the same min-label components -- the batch
+# pair) and folds it into the same min-id components -- the batch
 # reachability oracle carries over verbatim
 ORACLE_SQL["streaming_components"] = \
     ORACLE_SQL["simjoin_components_incremental"]

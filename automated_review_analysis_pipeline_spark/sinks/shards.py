@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from automated_review_analysis_pipeline_spark.operators.curation import (
     _shard_assign,
@@ -103,6 +104,16 @@ def write_training_shards(documents: DataFrame, out_dir: str,
     written = spark.read.schema(data.schema).parquet(path)
     rows = sorted(_shard_stats(written, id_col, text_col).collect(),
                   key=lambda r: r["shard"])
+    from .. import fsio
+    if not rows:
+        # an empty corpus writes no shard directory: leave one schema-
+        # bearing empty file, columns in the order a partitioned read
+        # returns them, so the delivery reads back
+        schema = StructType([f for f in data.schema if f.name != "shard"]
+                            + [data.schema["shard"]])
+        if not fsio.write_empty_parquet_fast(spark, path, schema):
+            (spark.createDataFrame([], schema).repartition(1)
+             .write.mode("overwrite").parquet(path))
     manifest = {
         "seed": seed,
         "n_shards": n_shards,
@@ -117,7 +128,6 @@ def write_training_shards(documents: DataFrame, out_dir: str,
     # sidecar LAST via the Hadoop FS API -- out_dir may be s3a://; a
     # crash before this line leaves no manifest, so read_training_shards
     # fails fast instead of validating a half-delivery
-    from .. import fsio
     fsio.write_text(spark, fsio.join(out_dir, "manifest.json"),
                     json.dumps(manifest, indent=1, sort_keys=True))
     return manifest

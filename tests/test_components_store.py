@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark import fsio
+from automated_review_analysis_pipeline_spark.operators import similarity
 from automated_review_analysis_pipeline_spark.operators.similarity import (
     build_components_store,
     components_append,
@@ -80,13 +82,18 @@ def test_components_append_batch_id_replay_is_noop(spark, tmp_path):
     assert _labels(got) == [(1, 1), (2, 1), (3, 1)]
 
 
-def test_components_append_star_runs_on_delta_not_history(spark, tmp_path):
-    """The scale claim itself: the star rounds inside an append see
-    only the CONTRACTED delta graph. Gate: append a single edge to a
-    store built from a long chain -- the contracted graph has <= 2
+@pytest.mark.parametrize("max_collect", [0, 1_000_000],
+                         ids=["star", "driver"])
+def test_components_append_star_runs_on_delta_not_history(
+        spark, tmp_path, monkeypatch, max_collect):
+    """The scale claim itself: the components pass inside an append
+    sees only the CONTRACTED delta graph. Gate: append a single edge to
+    a store built from a long chain -- the contracted graph has <= 2
     nodes, so star converges with ZERO rounds of work proportional to
     the 200-edge history (asserted via the merge map size implied by
-    the label diff), and the result is still exact."""
+    the label diff), and the result is still exact. Runs on both sides
+    of the size switch."""
+    monkeypatch.setattr(similarity, "MAX_COLLECT_EDGES", max_collect)
     store = str(tmp_path / "comp")
     chain = [(i + 1, i) for i in range(200)]
     build_components_store(

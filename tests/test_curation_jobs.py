@@ -16,6 +16,9 @@ from automated_review_analysis_pipeline_spark.operators.dedup import (
     exact_dedup,
     minhash_near_dup_pairs,
 )
+from automated_review_analysis_pipeline_spark.operators.similarity import (
+    star_connected_components,
+)
 from automated_review_analysis_pipeline_spark.sinks.shards import (
     write_training_shards,
 )
@@ -44,8 +47,11 @@ def test_curation_and_index_job_ceilings(spark, tmp_path):
     (1 while ``_spread`` counted the input's partitions);
     ``write_training_shards`` 5 (12 while the manifest re-ran the
     input); ``bm25_index_delete`` 7 (9 while the id list was a pickled
-    frame and doclen/ was read by schema inference). The ceilings are
-    the measured maximum + 2."""
+    frame and doclen/ was read by schema inference);
+    ``star_connected_components`` over the 3 near-dup edges, checkpointed
+    first, 5 (6 while the edges took the star path, whose convergence
+    check runs even when no round is needed; graphs that need rounds
+    save more). The ceilings are the measured maximum + 2."""
     uniq = exact_dedup(_docs(spark), ["text"], order_by=["doc_id"])
     box = {}
 
@@ -54,6 +60,12 @@ def test_curation_and_index_job_ceilings(spark, tmp_path):
 
     assert _jobs_in_group(spark, f"minhash-{uuid.uuid4().hex}", build) == 0
     assert box["pairs"].count() > 0
+
+    edges = box["pairs"].select(F.col("id_a").alias("a"),
+                                F.col("id_b").alias("b")).localCheckpoint()
+    n = _jobs_in_group(spark, f"components-{uuid.uuid4().hex}",
+                       lambda: star_connected_components(edges))
+    assert n <= 7, n
 
     n = _jobs_in_group(
         spark, f"shards-{uuid.uuid4().hex}",

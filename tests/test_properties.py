@@ -8,6 +8,7 @@ for hypothesis).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -237,52 +238,45 @@ def test_quantize_dequantize_roundtrip(spark, sf_dir):
             assert abs(x - qi * step) <= step / 2 + 1e-6, (r["vec_id"], x, qi)
 
 
-def test_near_dup_components_three_regimes_agree(spark, sf_dir):
-    """All THREE component regimes -- driver union-find (small graphs),
-    alternating large-star/small-star (the distributed default), and
-    min-label propagation (the O(diameter) cross-check) -- must produce
-    identical assignments, and the edge-count auto-flip
-    (`distributed=None`) must land on the same answer whichever side of
-    `max_collect_edges` the graph falls."""
+def test_near_dup_components_three_regimes_agree(spark, sf_dir, monkeypatch):
+    """The driver side of the connected-components size switch (union-
+    find), the star side (large-star/small-star rounds, forced with a
+    zero edge bound) and the default (whichever side the graph's edge
+    count picks) must produce identical assignments."""
     from pyspark.sql import functions as F
 
     from automated_review_analysis_pipeline_spark.operators import similarity as sim
     from automated_review_analysis_pipeline_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 150)
-    a = [tuple(r) for r in
-         sim.near_dup_components(e, 0.35, distributed=False).collect()]
-    star = [tuple(r) for r in
-            sim.near_dup_components(e, 0.35, distributed=True).collect()]
-    minlabel = [tuple(r) for r in
-                sim.near_dup_components(
-                    e, 0.35, distributed=True,
-                    algorithm="minlabel").collect()]
-    assert a == star == minlabel
-    # auto-flip: a zero edge budget forces the distributed path, the
-    # default budget keeps union-find -- results must not depend on it
-    lo = [tuple(r) for r in
-          sim.near_dup_components(e, 0.35, max_collect_edges=0).collect()]
-    hi = [tuple(r) for r in sim.near_dup_components(e, 0.35).collect()]
-    assert lo == a and hi == a
+    default = [tuple(r) for r in sim.near_dup_components(e, 0.35).collect()]
+    with monkeypatch.context() as m:
+        m.setattr(sim, "MAX_COLLECT_EDGES", 1_000_000)
+        driver = [tuple(r) for r in
+                  sim.near_dup_components(e, 0.35).collect()]
+        m.setattr(sim, "MAX_COLLECT_EDGES", 0)
+        star = [tuple(r) for r in
+                sim.near_dup_components(e, 0.35).collect()]
+    assert driver == star == default
     # every component representative is the min id of its members
     import collections
     groups = collections.defaultdict(list)
-    for node, comp in a:
+    for node, comp in driver:
         groups[comp].append(node)
     for comp, members in groups.items():
         assert comp == min(members)
 
 
-def test_star_components_chain_logarithmic_rounds(spark):
+def test_star_components_chain_logarithmic_rounds(spark, monkeypatch):
     """The scale claim made concrete: on a 256-node CHAIN (diameter 255,
     min-label propagation's worst case -- it would need ~255 rounds),
-    large-star/small-star must label every node with component 0 in
-    ~log(diameter) rounds, and no round's physical plan may contain a
-    single-partition Coalesce (the exact defect this algorithm replaces)
-    or a CartesianProduct."""
+    large-star/small-star (forced with a zero edge bound) must label
+    every node with component 0 in ~log(diameter) rounds, and no
+    round's physical plan may contain a single-partition Coalesce or a
+    CartesianProduct."""
     from automated_review_analysis_pipeline_spark.operators import similarity as sim
 
+    monkeypatch.setattr(sim, "MAX_COLLECT_EDGES", 0)
     n = 256
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "a long, b long")
@@ -298,13 +292,18 @@ def test_star_components_chain_logarithmic_rounds(spark):
         assert "CartesianProduct" not in p, p
 
 
-def test_star_components_random_graph_matches_union_find(spark):
-    """Star components on a seeded random graph (mixed component sizes,
-    isolated pairs, a dense clique) must equal a reference union-find."""
+@pytest.mark.parametrize("max_collect", [0, 1_000_000],
+                         ids=["star", "driver"])
+def test_star_components_random_graph_matches_union_find(
+        spark, monkeypatch, max_collect):
+    """Both sides of the size switch, on a seeded random graph (mixed
+    component sizes, isolated pairs, a dense clique), must equal a
+    reference union-find."""
     import random
 
     from automated_review_analysis_pipeline_spark.operators import similarity as sim
 
+    monkeypatch.setattr(sim, "MAX_COLLECT_EDGES", max_collect)
     rng = random.Random(42)
     n = 400
     edge_list = [(rng.randrange(n), rng.randrange(n)) for _ in range(300)]
@@ -335,6 +334,29 @@ def test_star_components_random_graph_matches_union_find(spark):
     got = {r["node"]: r["component"] for r in labels.collect()}
     assert got == want
     assert rounds <= 12, rounds
+    assert (rounds == 0) == (max_collect > 0), rounds
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+def test_star_components_labels_keep_edge_type(spark, monkeypatch,
+                                               id_type):
+    """The driver side's labels have exactly the star side's schema,
+    whose type is the edge columns' type."""
+    from pyspark.sql.types import IntegerType, LongType
+
+    from automated_review_analysis_pipeline_spark.operators import similarity as sim
+
+    edges = spark.createDataFrame([(1, 2), (3, 2), (5, 4)],
+                                  f"a {id_type}, b {id_type}")
+    driver, _ = sim.star_connected_components(edges)
+    monkeypatch.setattr(sim, "MAX_COLLECT_EDGES", 0)
+    star, _ = sim.star_connected_components(edges)
+    assert driver.schema == star.schema
+    want_type = IntegerType() if id_type == "int" else LongType()
+    assert {f.dataType for f in driver.schema.fields} == {want_type}
+    assert sorted(map(tuple, driver.collect())) \
+        == sorted(map(tuple, star.collect())) \
+        == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)]
 
 
 def test_pairwise_banded_equals_exact_and_is_lazy(spark, sf_dir):

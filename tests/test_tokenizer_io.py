@@ -77,7 +77,7 @@ def test_training_shards_write_read_validate_roundtrip(spark, sf_dir,
     """Write shards -> manifest matches the pure-aggregate query ->
     read-back validates and reproduces the corpus -> rows inside each
     shard file are position-ordered -> a corrupted delivery raises
-    naming the bad shard."""
+    naming the bad shard; an empty corpus reads back empty."""
     import json
 
     import pytest
@@ -107,6 +107,14 @@ def test_training_shards_write_read_validate_roundtrip(spark, sf_dir,
     assert back.count() == docs.count()
     assert sorted(r["doc_id"] for r in back.select("doc_id").collect()) \
         == sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+
+    # an empty corpus reads back as an empty, validated frame with the
+    # same columns
+    empty = str(tmp_path / "empty")
+    assert write_training_shards(docs.where("false"), empty,
+                                 n_shards=4)["shards"] == []
+    none = read_training_shards(spark, empty)
+    assert none.schema == back.schema and none.count() == 0
 
     # per-file position order (the loader streams shards sequentially)
     import glob

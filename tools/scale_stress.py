@@ -122,6 +122,17 @@ def _incremental_minhash(docs: DataFrame) -> DataFrame:
         num_hashes=16, bands=4, threshold=0.7, update_store=False)
 
 
+def _star_side(fn, *args, **kwargs):
+    """Call ``fn`` with the connected-components edge bound at 0, so
+    every edge set takes the star rounds."""
+    saved = sim.MAX_COLLECT_EDGES
+    sim.MAX_COLLECT_EDGES = 0
+    try:
+        return fn(*args, **kwargs)
+    finally:
+        sim.MAX_COLLECT_EDGES = saved
+
+
 def _audio_features(docs: DataFrame) -> DataFrame:
     """Round-7 audio path: synthesize genuine mono 8-bit PCM WAVs from
     the text bytes (one JVM binary concat) and run the REAL RIFF decode
@@ -205,11 +216,11 @@ def main() -> None:
             d, ["lang", "source"], order_by=["doc_id"]),
         "near_dup_components (thr 0.8)": lambda d, v:
             sim.near_dup_components(v, threshold=0.8),
-        # round-8: force the distributed large-star/small-star path
-        # (the auto edge-count flip keeps test scales on union-find, so
-        # without forcing it the 100 TB algorithm would never be timed)
+        # force the large-star/small-star side (the edge-count switch
+        # keeps test scales on the driver union-find, so without forcing
+        # it the 100 TB algorithm would never be timed)
         "near_dup_components star (forced)": lambda d, v:
-            sim.near_dup_components(v, threshold=0.8, distributed=True),
+            _star_side(sim.near_dup_components, v, threshold=0.8),
         "semantic_dedup (thr 0.8)": lambda d, v: sim.semantic_dedup(
             v, threshold=0.8),
         "leakage_safe_split (thr 0.8)": lambda d, v:
