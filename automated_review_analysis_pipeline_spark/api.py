@@ -19,7 +19,10 @@ from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
     analyze_wide,
     demo_classifier,
 )
-from automated_review_analysis_pipeline_spark.session import get_spark
+from automated_review_analysis_pipeline_spark.session import (
+    driver_frame,
+    get_spark,
+)
 from automated_review_analysis_pipeline_spark.sinks.excel import write_excel_report
 from automated_review_analysis_pipeline_spark.sources.survey import read_survey_csv
 
@@ -53,7 +56,7 @@ def detect_survey_language(survey: DataFrame) -> str | None:
     if not samples:
         return None
     langs = (
-        survey.sparkSession.createDataFrame(samples, "idx int, sample string")
+        driver_frame(survey.sparkSession, samples, "idx int, sample string")
         .select("idx", language_id(clean_text(F.col("sample"))).alias("lang"))
         .collect()
     )

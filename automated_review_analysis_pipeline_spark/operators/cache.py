@@ -12,6 +12,15 @@ distinct). Catalyst will never dedup UDF inputs on its own, so
     distinct(keys) --left-anti--> cache --classifier--> misses (tagged)
     cache --left-semi--> distinct(keys)                = hits (tagged)
     collect(hits UNION ALL misses); misses --> one file --> cache dir
+    collected rows --> driver frame                    = the result
+
+Every frame built here from driver data goes through
+:func:`..session.driver_frame` (Arrow, a ``LocalRelation``): an empty
+cache directory is an empty relation the optimizer prunes (the
+anti-join keeps every key, the hits branch vanishes), and the result,
+the broadcast side of every join back, is collected and broadcast with
+no Spark job and no Python worker. Only the classifier's own stage may
+start one.
 
 The classifier is the survey plans' column contract,
 ``classifier(question: Column, answer: Column) -> struct<sentiment,
@@ -34,6 +43,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from automated_review_analysis_pipeline_spark.session import driver_frame
+
 CACHE_SCHEMA = ("industry string, question string, answer string, "
                 "sentiment string, category string")
 
@@ -48,7 +59,10 @@ Classifier = Callable[[Column, Column], Column]
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
     """Parquet cache table; missing/empty -> empty frame (the reference
     tolerates a missing/corrupt cache file the same way,
-    survey_analysis.py:145-153).
+    survey_analysis.py:145-153). The empty frame is a driver frame, an
+    empty ``LocalRelation`` the optimizer prunes from every plan over it
+    (a pickled empty list cost a job of defaultParallelism Python
+    tasks per action).
 
     Keys are deduplicated on read: two concurrent runs over an empty
     cache can both classify the same miss set and both append (the
@@ -67,7 +81,7 @@ def load_cache(spark: SparkSession, path: str) -> DataFrame:
                 .dropDuplicates(KEY_COLS)
     except OSError:
         pass
-    return spark.createDataFrame([], CACHE_SCHEMA)
+    return driver_frame(spark, [], CACHE_SCHEMA)
 
 
 def _recover_interrupted_compaction(path: str) -> None:
@@ -106,7 +120,7 @@ def import_json_cache(spark: SparkSession, json_path: str,
         rows.append((parts[0], parts[1], parts[2], str(val[0]), str(val[1])))
     if not rows:
         return 0
-    fresh = spark.createDataFrame(rows, CACHE_SCHEMA).distinct().join(
+    fresh = driver_frame(spark, rows, CACHE_SCHEMA).distinct().join(
         load_cache(spark, cache_path), KEY_COLS, "left_anti").collect()
     _append(cache_path, [r.asDict() for r in fresh])
     return len(fresh)
@@ -245,8 +259,10 @@ def classify_with_cache(
     With ``cache_path``, one collect returns hits (through load_cache,
     so duplicate keys collapse) and classified misses; the misses are
     appended as one parquet file (none if every key hits) and the result
-    is a DataFrame over the collected rows. Without it every distinct
-    key is classified lazily in the returned plan.
+    is a driver frame over the collected rows (a ``LocalRelation``, so
+    broadcasting it to the join backs runs no job and starts no Python
+    worker). Without it every distinct key is classified lazily in the
+    returned plan.
 
     ``max_parallelism`` bounds API-mode concurrency: the miss set is
     repartitioned to that many partitions before the classifier UDF, so at
@@ -270,4 +286,4 @@ def classify_with_cache(
     rows = hits.withColumn("__miss", F.lit(False)).unionByName(
         computed.withColumn("__miss", F.lit(True))).collect()
     _append(cache_path, [r.asDict() for r in rows if r["__miss"]])
-    return spark.createDataFrame([r[:-1] for r in rows], CACHE_SCHEMA)
+    return driver_frame(spark, [r[:-1] for r in rows], CACHE_SCHEMA)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark.plan_cache import plan_cache
+from automated_review_analysis_pipeline_spark.session import driver_frame
 
 
 class _jd:
@@ -406,7 +407,7 @@ def incremental_minhash_pairs(spark, store_dir: str, delta_docs: DataFrame,
         (os.listdir(store_dir) if os.path.isdir(store_dir) else [])
         if f.endswith(".parquet"))
     store = (spark.read.parquet(*files) if files
-             else spark.createDataFrame([], SIG_TABLE_SCHEMA))
+             else driver_frame(spark, [], SIG_TABLE_SCHEMA))
     new_sig = plan_cache(
         add_minhash(_spread(delta_docs.select(id_col, text_col), id_col),
                     text_col, k, num_hashes)
@@ -1178,17 +1179,6 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
             f"{mode!r}); append deltas with simjoin_append")
     spark = documents.sparkSession
 
-    def _typed_empty(schema):
-        # ZERO-partition frame with exactly this schema (taken from the
-        # real plan, so the persisted layout cannot drift): the empty-
-        # store writes below then run 0 tasks instead of
-        # defaultParallelism empty task commits each -- the stream-start
-        # shape (streaming_set_similarity / streaming_components) builds
-        # an empty store inside every drain, and the empty build was
-        # measured at ~1.3s of pure job/commit overhead
-        return spark.createDataFrame(
-            spark.sparkContext.emptyRDD(), schema)
-
     is_empty = documents.isEmpty()
     toks = (_spread(documents
                     .select(F.col(id_col).alias("id"), F.col(text_col)),
@@ -1201,7 +1191,13 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
         F.sort_array(F.collect_list("tok")).alias("toks"),
         F.count(F.lit(1)).alias("sz"))
     if is_empty:
-        arrs = _typed_empty(arrs.schema)
+        # empty driver frames (zero partitions) with exactly the real
+        # plans' schemas, so the persisted layout cannot drift and the
+        # empty-store writes below run 0 tasks -- the stream-start shape
+        # (streaming_set_similarity / streaming_components) builds an
+        # empty store inside every drain; defaultParallelism empty task
+        # commits per write measured ~1.3 s per empty build
+        arrs = driver_frame(spark, [], arrs.schema)
     docs_cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                           for f in arrs.schema.fields)
     if is_empty:
@@ -1222,9 +1218,9 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in prefix0.schema.fields)
         idt = documents.schema[id_col].dataType.simpleString()
-        pairs_schema = spark.createDataFrame(
-            [], f"a_id {idt}, b_id {idt}, n_common int, "
-                f"jaccard double").schema
+        pairs0 = driver_frame(
+            spark, [], f"a_id {idt}, b_id {idt}, n_common int, "
+                       f"jaccard double")
         if (fsio.reset_bucketed_dir_fast(
                 spark, store_dir + "/docs",
                 _simjoin_docs_table_name(store_dir))
@@ -1234,7 +1230,7 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
                 and fsio.write_empty_parquet_fast(
                     spark, store_dir + "/dfreq", dfreq0.schema)
                 and fsio.write_empty_parquet_fast(
-                    spark, store_dir + "/pairs", pairs_schema)):
+                    spark, store_dir + "/pairs", pairs0.schema)):
             fsio.write_json(
                 spark, fsio.join(store_dir, "meta.json"),
                 {"threshold": threshold, "k": k,
@@ -1261,7 +1257,7 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
         .select("id", F.explode("toks").alias("tok"))
     dfreq_df = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     if is_empty:
-        dfreq_df = _typed_empty(dfreq_df.schema)
+        dfreq_df = driver_frame(spark, [], dfreq_df.schema)
     dfreq_df.write.mode("overwrite").parquet(store_dir + "/dfreq")
     # empty path ranks against the in-plan typed frame instead of
     # re-reading the just-written empty parquet: whether a
@@ -1274,7 +1270,7 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
         else spark.read.parquet(store_dir + "/dfreq"),
         threshold)
     if is_empty:
-        prefix_df = _typed_empty(prefix_df.schema)
+        prefix_df = driver_frame(spark, [], prefix_df.schema)
     prefix_cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                             for f in prefix_df.schema.fields)
     _write_prefix_bucketed(prefix_df, store_dir, n_buckets, "overwrite")
@@ -1282,12 +1278,7 @@ def build_simjoin_index(documents: DataFrame, store_dir: str,
         # stream-start shape: an empty corpus has no pairs -- write the
         # typed empty pair table without planning the candidate/verify
         # jobs over empty frames (several wasted Spark jobs otherwise)
-        idt = documents.schema[id_col].dataType.simpleString()
-        _typed_empty(
-            spark.createDataFrame(
-                [], f"a_id {idt}, b_id {idt}, n_common int, "
-                    f"jaccard double").schema) \
-            .write.mode("overwrite").parquet(store_dir + "/pairs")
+        pairs0.write.mode("overwrite").parquet(store_dir + "/pairs")
     build_stats = {"n_docs": 0, "n_candidates": 0}
     if not is_empty:
         # bucketed on both sides of the self-join: the one-shot
@@ -1629,15 +1620,17 @@ def simjoin_delete(spark, store_dir: str, doc_ids,
     # discipline): a delete is |ids|-sized, never an O(store) scan
     sample = [r["id"] for r in new_ts.limit(1025).collect()]
     if len(sample) <= 1024:
+        n_new = len(sample)
         n_present = (docs_tbl.where(F.col("id").isin(sample)).count()
                      if sample else 0)
     else:
+        n_new = new_ts.count()
         n_present = docs_tbl.join(F.broadcast(new_ts), "id").count()
     n_store = int(meta.get("n_docs_total",
                            (meta.get("build_stats") or {})
                            .get("n_docs", 0)))
     store_delete.append_tombstones(
-        spark, store_dir, new_ts, meta,
+        spark, store_dir, new_ts, n_new, meta,
         extra_meta={"n_docs_total": max(0, n_store - n_present)},
         batch_id=batch_id)
     return simjoin_pairs(spark, store_dir)
@@ -2066,12 +2059,9 @@ def simjoin_store_stats(spark, store_dir: str,
     drift_ratio (null until both sides are measurable),
     refreeze_recommended."""
     row = simjoin_store_stats_row(spark, store_dir, drift_threshold)
-    # ONE slice: a 32-slice parallelized single row makes any take()/
-    # first() walk empty partitions through several sequential mini-
-    # jobs (measured 0.7-0.9 s per first() on this box); the report is
-    # one row computed driver-side, so one partition is its real shape
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([tuple(row.values())], 1),
+    # one row computed driver-side: one partition, no Python worker
+    return driver_frame(
+        spark, [tuple(row.values())],
         "order_epoch int, append_epoch int, n_appends_recorded int, "
         "build_cand_density double, recent_cand_density double, "
         "drift_ratio double, refreeze_recommended boolean")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from automated_review_analysis_pipeline_spark.session import driver_frame
+
 
 def write_bucketed(df: DataFrame, table: str, keys: list[str],
                    n_buckets: int = 8,
@@ -207,8 +209,8 @@ def assign_global_ids(df: DataFrame, order_cols: list[str],
         offsets.append((b, acc))
         acc += sizes[b]
     spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        offsets, "__gid_bucket int, __gid_offset long")
+    off_df = driver_frame(
+        spark, offsets, "__gid_bucket int, __gid_offset long")
 
     w = Window.partitionBy("__gid_bucket").orderBy(*cols)
     return (
@@ -255,8 +257,8 @@ def exclusive_prefix_sum(df: DataFrame, order_cols: list[str],
         offsets.append((b, acc))
         acc += int(sums[b])
     spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        offsets, "__ps_bucket int, __ps_offset long")
+    off_df = driver_frame(
+        spark, offsets, "__ps_bucket int, __ps_offset long")
 
     w = (Window.partitionBy("__ps_bucket").orderBy(*cols)
          .rowsBetween(Window.unboundedPreceding, -1))
@@ -743,16 +745,14 @@ def index_compact(spark: SparkSession, store_dir: str,
 
 
 def _report_df(spark: SparkSession, rows: list) -> DataFrame:
-    """The (part, metric, value) report frame as ONE partition: a
-    driver-built list parallelized over defaultParallelism slices
-    leaves most slices empty, and any take()/first() then walks them
+    """The (part, metric, value) report frame as ONE partition: spread
+    over defaultParallelism slices, any take()/first() walks them
     through several sequential mini-jobs (measured 0.7-0.9 s per
     first() at local[32]). The report is a few dozen driver-side rows
     -- one partition is its real shape at any scale."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "part string, metric string, value string") \
-        .orderBy("part", "metric")
+    return driver_frame(
+        spark, rows, "part string, metric string, value string") \
+        .coalesce(1).orderBy("part", "metric")
 
 
 def index_stats(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1039,7 +1039,7 @@ def _read_pruned(spark: SparkSession, out_dir: str, meta: dict,
 
     if not keep:
         schema = StructType.fromJson(meta["schema"])
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
     paths = [f"{out_dir}/data/file_id={k}" for k in sorted(keep)]
     return (spark.read.option("basePath", out_dir + "/data")
             .parquet(*paths))

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from automated_review_analysis_pipeline_spark.session import driver_frame
+
 
 def expectations_report(df: DataFrame,
                         rules: dict[str, Column],
@@ -49,7 +51,7 @@ def expectations_report(df: DataFrame,
         out_rows.append((name, int(extra)))
 
     spark = df.sparkSession
-    res = spark.createDataFrame(out_rows, "rule string, n_violations long")
+    res = driver_frame(spark, out_rows, "rule string, n_violations long")
     denom = float(n_rows) if n_rows else 1.0
     return (
         res.select(
@@ -495,8 +497,8 @@ def _profile_finalize(spark, stage1: DataFrame,
                            .otherwise(F.col("e_raw")), 4))))
     # empty input produces no groups; re-anchor on the schema so the
     # contract (one row per column, n_rows 0) holds like the wide lane
-    names = spark.createDataFrame(list(fields),
-                                  "column string, ndvable boolean")
+    names = driver_frame(spark, list(fields),
+                         "column string, ndvable boolean")
     return (names.join(est, "column", "left")
             .select("column",
                     F.coalesce("n_rows", F.lit(0)).cast("long")
@@ -715,7 +717,7 @@ def _paths_df(spark, paths) -> DataFrame:
                 .option("pathGlobFilter", "*.parquet")
                 .option("recursiveFileLookup", "true")
                 .load(paths).select("path"))
-    return spark.createDataFrame([(p,) for p in paths], "path string")
+    return driver_frame(spark, [(p,) for p in paths], "path string")
 
 
 def _local_path(path: str) -> str:

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark.functions.classify import SENTIMENT_ORDER
+from automated_review_analysis_pipeline_spark.session import driver_frame
 
 UNSPECIFIED = "Unspecified"
 PRODUCT_MAX_CHARS = 100  # survey_analysis.py:292 (prod[:100])
@@ -50,8 +51,9 @@ def melt_sentiments(wide: DataFrame) -> DataFrame:
     column (R5, survey_analysis.py:326-337). Blank/missing -> Neutral."""
     sent_cols = [c for c in wide.columns if c.endswith("_Sentiment")]
     if not sent_cols:
-        return wide.sparkSession.createDataFrame(
-            [], "Product string, Question string, Sentiment string")
+        return driver_frame(
+            wide.sparkSession, [],
+            "Product string, Question string, Sentiment string")
     pairs = F.array(*[
         F.struct(
             F.lit(c[: -len("_Sentiment")]).alias("Question"),

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark.plan_cache import plan_cache
+from automated_review_analysis_pipeline_spark.session import driver_frame
 from pyspark.sql.functions import broadcast
 
 from automated_review_analysis_pipeline_spark.functions.vectors import (
@@ -696,8 +697,8 @@ def build_pq_index(embeddings: DataFrame, store_dir: str,
 
     book_rows = [(j, c, [float(v) for v in books[j, c]])
                  for j in range(m) for c in range(ksub)]
-    spark.createDataFrame(
-        book_rows, "subspace int, code int, vals array<double>"
+    driver_frame(
+        spark, book_rows, "subspace int, code int, vals array<double>"
     ).write.mode("overwrite").parquet(store_dir + "/codebooks")
 
     (_pq_encode(embeddings.select(id_col, vec_col), books, m, dsub,
@@ -944,8 +945,8 @@ def build_ivfpq_index(embeddings: DataFrame, store_dir: str,
     dsub = S.shape[1] // m
     book_rows = [(j, c, [float(v) for v in books[j, c]])
                  for j in range(m) for c in range(ksub)]
-    spark.createDataFrame(
-        book_rows, "subspace int, code int, vals array<double>"
+    driver_frame(
+        spark, book_rows, "subspace int, code int, vals array<double>"
     ).write.mode("overwrite").parquet(store_dir + "/codebooks")
 
     coded = _pq_encode(assigned.select("c_id", "c_vec", "cell"), books, m,
@@ -1096,7 +1097,7 @@ def ivfpq_index_delete(spark, store_dir: str, vec_ids,
         spark, store_dir, meta, ("id",))
     new_ts = ids.localCheckpoint(eager=True)
     return store_delete.append_tombstones(
-        spark, store_dir, new_ts, meta, batch_id=batch_id)
+        spark, store_dir, new_ts, new_ts.count(), meta, batch_id=batch_id)
 
 
 def ivfpq_rebuild(spark, store_dir: str, embeddings: DataFrame,
@@ -1634,10 +1635,11 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
     one size switch.
 
     The edges are canonicalised (a > b, no self-loops, distinct) and
-    localCheckpoint'ed once, then counted. At most
-    :data:`MAX_COLLECT_EDGES` edges collect to the driver, where a
-    union-find labels them; the labels come back as an Arrow-built frame
-    with the edge columns' type (no Python worker) and ``rounds`` is 0.
+    localCheckpoint'ed once. One job fetches at most
+    :data:`MAX_COLLECT_EDGES` + 1 of them to the driver as Arrow: when
+    the fetch holds the whole set, a union-find labels it, the labels
+    come back as a driver frame with the edge columns' type (no Python
+    worker) and ``rounds`` is 0.
     Above the bound, alternating large-star/small-star rounds run
     (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii: "Connected
     Components in MapReduce and Beyond", SoCC 2014) -- the 100 TB path.
@@ -1684,12 +1686,10 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if E.count() <= MAX_COLLECT_EDGES:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+    # one job both decides the side and fetches a small edge set
+    fetched = E.limit(MAX_COLLECT_EDGES + 1).toArrow()
+    if fetched.num_rows <= MAX_COLLECT_EDGES:
         schema = _star_labels(E).schema  # both sides return one schema
-        edge_rows = E.collect()
         E.unpersist()
         parent: dict = {}
 
@@ -1699,17 +1699,16 @@ def star_connected_components(edges: DataFrame, a_col: str = "a",
                 x = parent[x]
             return x
 
-        for r in edge_rows:
-            a, b = r[0], r[1]
+        for a, b in zip(fetched.column("a").to_pylist(),
+                        fetched.column("b").to_pylist()):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        table = pa.table({"node": list(parent),
-                          "component": [find(n) for n in parent]},
-                         schema=to_arrow_schema(schema))
-        return edges.sparkSession.createDataFrame(table, schema), 0
+        return driver_frame(edges.sparkSession,
+                            [(n, find(n)) for n in parent], schema), 0
+    del fetched  # the rounds need none of the fetched edges
     rounds = 0
     for _ in range(max_iterations):
         # structural convergence: star forest reached? BOTH conditions
@@ -1808,10 +1807,6 @@ def build_components_store(edges: DataFrame, store_dir: str,
     spark = edges.sparkSession
     labels, _rounds = star_connected_components(
         edges, a_col=a_col, b_col=b_col, max_iterations=max_iterations)
-    if not labels.head(1):
-        # edge-less build (stream-start): a 0-partition empty write
-        # would leave no schema-bearing file for components_read
-        labels = spark.createDataFrame([], labels.schema).repartition(1)
     labels.write.mode("overwrite").parquet(
         fsio.join(store_dir, "labels/v0"))
     fsio.write_json(spark, fsio.join(store_dir, "meta.json"),
@@ -1947,10 +1942,9 @@ def components_append(spark, store_dir: str, new_edges: DataFrame,
         .localCheckpoint(eager=True)
     if delta_labels.isEmpty():
         # a no-op delta (edges all inside existing components) still
-        # commits a version for replay bookkeeping; a 0-partition
-        # empty write would leave no schema-bearing file for the fold
-        delta_labels = spark.createDataFrame(
-            [], delta_labels.schema).repartition(1)
+        # commits a version for replay bookkeeping: one schema-bearing
+        # empty file for the fold
+        delta_labels = driver_frame(spark, [], delta_labels.schema)
 
     nxt = int(meta["version"]) + 1
     delta_labels.write.mode("overwrite").parquet(
@@ -2054,7 +2048,7 @@ def components_delete(spark, store_dir: str, nodes, edges: DataFrame,
                    "node", "left")
              .select("node", F.col("__new").alias("component")))
     if delta.isEmpty():
-        delta = spark.createDataFrame([], cur.schema).repartition(1)
+        delta = driver_frame(spark, [], cur.schema)
     delta = delta.localCheckpoint(eager=True)
     nxt = int(meta["version"]) + 1
     delta.write.mode("overwrite").parquet(

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from automated_review_analysis_pipeline_spark.session import driver_frame
+
 # Tiny stopword inventories for the n-gram/stopword language-ID heuristic.
 # Deliberately small + deterministic: the point is the operator shape
 # (per-language evidence count -> argmax), not lexical completeness.
@@ -1087,8 +1089,8 @@ def bpe_train(documents: DataFrame, n_merges: int = 3,
     """
     learned = _train_merges(documents, n_merges, text_col, batch=batch,
                             mode=mode)
-    return documents.sparkSession.createDataFrame(
-        learned,
+    return driver_frame(
+        documents.sparkSession, learned,
         "merge_rank int, left string, right string, merged string, "
         "n_occurrences long",
     ).orderBy("merge_rank")
@@ -1565,8 +1567,9 @@ def bpe_vocab(documents: DataFrame, n_merges: int = 3,
     rows = ([(i + 1, tok, "base") for i, tok in enumerate(base)]
             + [(len(base) + rank, merged, "merge")
                for rank, _, _, merged, _ in learned])
-    return documents.sparkSession.createDataFrame(
-        rows, "vocab_id long, token string, kind string"
+    return driver_frame(
+        documents.sparkSession, rows,
+        "vocab_id long, token string, kind string"
     ).orderBy("vocab_id")
 
 
@@ -2093,8 +2096,8 @@ def build_bm25_index(documents: DataFrame, store_dir: str,
                 ["word"], ["word"], n_buckets)
         # remote FS / no pyarrow: the generic writes below handle the
         # 0-row case via the typed empty
-        postings = spark.createDataFrame([], postings.schema)
-        dl = spark.createDataFrame([], dl.schema).repartition(1)
+        postings = driver_frame(spark, [], postings.schema)
+        dl = driver_frame(spark, [], dl.schema)
     write_bucketed_path(postings, store_dir + "/postings", name, cols,
                         ["word"], ["word"], n_buckets, "overwrite")
     dl.write.mode("overwrite").parquet(store_dir + "/doclen")
@@ -2145,12 +2148,19 @@ def bm25_index_delete(spark, store_dir: str, doc_ids,
         store_delete.as_id_frame(spark, doc_ids, dl, id_col),
         spark, store_dir, meta, ("id",))
     new_ts = ids.localCheckpoint(eager=True)
-    hit = (dl.join(F.broadcast(new_ts.select(
-        F.col("id").alias(id_col))), id_col)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t"))
-        .first())
+    # one aggregate counts the new tombstones (new_ts is distinct) and
+    # the doclen rows they hit, whose lengths the counters drop
+    hit = (new_ts.select(F.lit(1).alias("ts"),
+                         F.lit(None).cast(dl.schema["dl"].dataType)
+                         .alias("dl"))
+           .unionByName(dl.join(F.broadcast(new_ts.select(
+               F.col("id").alias(id_col))), id_col)
+               .select(F.lit(0).alias("ts"), "dl"))
+           .agg(F.sum("ts").alias("n_new"), F.count("dl").alias("n"),
+                F.sum("dl").alias("t"))
+           .first())
     return store_delete.append_tombstones(
-        spark, store_dir, new_ts, meta,
+        spark, store_dir, new_ts, int(hit["n_new"] or 0), meta,
         extra_meta={
             "n_docs": int(meta["n_docs"]) - int(hit["n"] or 0),
             "total_len": int(meta["total_len"]) - int(hit["t"] or 0)},

@@ -29,6 +29,7 @@ from automated_review_analysis_pipeline_spark.functions.classify import (
     lexicon_sentiment_sql,
 )
 from automated_review_analysis_pipeline_spark.functions.text import clean_text, is_filler
+from automated_review_analysis_pipeline_spark.session import driver_frame
 from automated_review_analysis_pipeline_spark.functions.classify import (
     keyword_category,
     lexicon_sentiment,
@@ -1953,8 +1954,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three full BPE merge rounds (count -> argmax -> apply -> recount);
     returns the learned merge table."""
     learned = _shared_merges(spark, sf_dir, 3)
-    return spark.createDataFrame(
-        learned,
+    return driver_frame(
+        spark, learned,
         "merge_rank int, left string, right string, merged string, "
         "n_occurrences long",
     ).orderBy("merge_rank")
@@ -2002,8 +2003,8 @@ def q_bpe_train_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the byte<->unicode table, no '</w>' marker -- the merge
     table an HF-interchange artifact needs."""
     learned = _shared_merges_bytes(spark, sf_dir, 3)
-    return spark.createDataFrame(
-        learned,
+    return driver_frame(
+        spark, learned,
         "merge_rank int, left string, right string, merged string, "
         "n_occurrences long",
     ).orderBy("merge_rank")
@@ -2314,8 +2315,8 @@ def q_streaming_asof_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the heartbeat must sit one full DELAY past mx so the final
         # watermark (hb_ts - delay) clears every click in the corpus
         hb_us = mx + span_minutes * 60_000_000 + 10**7
-        hb = spark.createDataFrame(
-            [(-1, 0, "heartbeat", None)],
+        hb = driver_frame(
+            spark, [(-1, 0, "heartbeat", None)],
             "event_id long, user_id long, event_type string, "
             "value double").select(
             "event_id", "user_id",

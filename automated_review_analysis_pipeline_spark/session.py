@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned for the driver harness: local[32], 128 GiB box. On a real cluster
 # spark.sql.shuffle.partitions should be ~2-3x total cores (or left to AQE
@@ -168,3 +168,28 @@ def get_spark(app_name: str = "automated-review-analysis-pipeline-spark",
                 # conf would break every file:// access -- drop it
                 hconf.unset("fs.file.impl")
     return spark
+
+
+def driver_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows``, a list of tuples (or Rows)
+    in *schema*'s column order; *schema* is a StructType or a DDL
+    string and is kept exactly. The package's one way to turn driver
+    data into a frame.
+
+    The data crosses to the JVM as Arrow, so the plan is a
+    ``LocalRelation``: collecting or broadcasting it runs no job, an
+    empty one is pruned by the optimizer, and no Python worker starts.
+    ``spark.createDataFrame(<list>, schema)`` instead pickles the rows
+    into an RDD that every action re-reads in ``defaultParallelism``
+    Python tasks, even when the list is empty."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

@@ -3,7 +3,9 @@
 Excel is inherently a driver-side, small-data sink (1 048 576-row sheet
 cap): the wide DataFrame is collect()ed ONCE (its plan and any inline
 classifier UDF run once per report) and the Summary is aggregated from
-those rows. Layout is the reference's: one data sheet per product
+those rows, through a driver frame (``session.driver_frame``: Arrow, a
+``LocalRelation``) so the aggregate runs JVM tasks only and starts no
+Python worker. Layout is the reference's: one data sheet per product
 (ResponseID string-sorted, quirk K1/O1), a Summary sheet, and a chart
 sheet per product with per-question pie charts (helper blocks at columns
 50/51, 2-per-row grid, 480x320, "<question> – Sentiment Mix (n=total)").
@@ -23,6 +25,7 @@ from pyspark.sql import DataFrame
 
 from automated_review_analysis_pipeline_spark.functions.text import sanitize_sheet_name
 from automated_review_analysis_pipeline_spark.operators.reshape import summary_from_wide
+from automated_review_analysis_pipeline_spark.session import driver_frame
 from automated_review_analysis_pipeline_spark.sinks import xlsx_writer
 
 try:  # gate: not in the container's baked-in set
@@ -48,7 +51,7 @@ def write_excel_report(wide: DataFrame, out_path: str,
     base_to_display = base_to_display or {}
     wide_rows = wide.collect()
     cols = wide.columns
-    local = wide.sparkSession.createDataFrame(wide_rows, wide.schema)
+    local = driver_frame(wide.sparkSession, wide_rows, wide.schema)
     # (Product, Question) order matches the golden workbook's Summary sheet
     summary_rows = sorted(summary_from_wide(local).collect(),
                           key=lambda r: (r["Product"], r["Question"]))

@@ -112,8 +112,8 @@ def write_training_shards(documents: DataFrame, out_dir: str,
         schema = StructType([f for f in data.schema if f.name != "shard"]
                             + [data.schema["shard"]])
         if not fsio.write_empty_parquet_fast(spark, path, schema):
-            (spark.createDataFrame([], schema).repartition(1)
-             .write.mode("overwrite").parquet(path))
+            driver_frame(spark, [], schema).write.mode("overwrite") \
+                .parquet(path)
     manifest = {
         "seed": seed,
         "n_shards": n_shards,

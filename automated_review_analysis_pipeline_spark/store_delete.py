@@ -117,19 +117,19 @@ def check_not_tombstoned(new_ids: DataFrame, spark: SparkSession,
 
 
 def append_tombstones(spark: SparkSession, store_dir: str,
-                      new_ts: DataFrame, meta: dict,
+                      new_ts: DataFrame, n_new: int, meta: dict,
                       extra_meta: dict | None = None,
                       replay_key: str = "last_delete_batch_id",
                       batch_id: int | None = None) -> dict:
     """The shared tail of every store's delete op: append *new_ts*
-    (already normalized + deduped against existing tombstones) to the
-    tombstone part under the staged commit protocol, bump the
-    tombstone counter, fold *extra_meta* (per-family counter
-    decrements), and flip meta.json as the atomic commit point.
+    (already normalized + deduped against existing tombstones; the
+    caller counted its *n_new* rows, usually in a pass it runs anyway)
+    to the tombstone part under the staged commit protocol, bump the
+    tombstone counter by *n_new*, fold *extra_meta* (per-family
+    counter decrements), and flip meta.json as the atomic commit point.
     Returns the committed meta."""
     from . import store_commit
 
-    n_new = new_ts.count()
     epoch = int(meta.get("append_epoch", 0)) + 1
     store_commit.begin_append(spark, store_dir, [TOMBSTONE_PART], epoch)
     new_ts.write.mode("append").parquet(tombstones_path(store_dir))

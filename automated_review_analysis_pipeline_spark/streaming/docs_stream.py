@@ -31,6 +31,7 @@ from automated_review_analysis_pipeline_spark.operators.dedup import (
     jaccard_with_sizes,
     lsh_candidate_pairs,
 )
+from automated_review_analysis_pipeline_spark.session import driver_frame
 
 SIG_SCHEMA = ("doc_id long, __shingles array<string>, __n int, "
               "minhash array<long>")
@@ -86,7 +87,7 @@ def streaming_minhash_pairs(spark: SparkSession, docs_path: str,
                     F.size("__shingles").cast("int").alias("__n"), "minhash")
         ).cache()
         store = (spark.read.parquet(store_dir) if has_parquet(store_dir)
-                 else spark.createDataFrame([], SIG_SCHEMA))
+                 else driver_frame(spark, [], SIG_SCHEMA))
         allsig = (
             new_sig.withColumn("__new", F.lit(True))
             .unionByName(store.withColumn("__new", F.lit(False)))
@@ -121,8 +122,8 @@ def streaming_minhash_pairs(spark: SparkSession, docs_path: str,
     )
     q.awaitTermination()
     if not has_parquet(results_dir):
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, jaccard_sim double")
+        return driver_frame(
+            spark, [], "id_a long, id_b long, jaccard_sim double")
     return (spark.read.parquet(results_dir)
             .dropDuplicates(["id_a", "id_b"])
             .orderBy("id_a", "id_b"))
@@ -359,7 +360,7 @@ def streaming_components(spark: SparkSession, docs_path: str,
          .start())
     q.awaitTermination()
     if not fsio.exists(spark, fsio.join(comp_dir, "meta.json")):
-        return spark.createDataFrame([], "doc_id long, component long")
+        return driver_frame(spark, [], "doc_id long, component long")
     return (components_read(spark, comp_dir)
             .select(F.col("node").alias("doc_id"), "component")
             .orderBy("doc_id"))
@@ -449,7 +450,7 @@ def streaming_embedding_drift(spark: SparkSession, vectors_path: str,
     q.awaitTermination()
     meta_p = fsio.join(state_dir, "meta.json")
     if not fsio.exists(spark, meta_p):  # empty stream: no new snapshot
-        acc = spark.createDataFrame([], "dim int, s decimal(38,9), n long")
+        acc = driver_frame(spark, [], "dim int, s decimal(38,9), n long")
     else:
         meta = fsio.read_json(spark, meta_p)
         acc = spark.read.parquet(
@@ -539,8 +540,8 @@ def streaming_ivfpq_maintain(spark: SparkSession, vectors_path: str,
                           spark.read.parquet(lake),
                           id_col=id_col, vec_col=vec_col)
             rebuilt = True
-        spark.createDataFrame(
-            [(batch_id, float(cos), rebuilt)],
+        driver_frame(
+            spark, [(batch_id, float(cos), rebuilt)],
             "batch_id long, cos_means double, rebuilt boolean") \
             .write.mode("append").parquet(alerts_dir)
 
@@ -552,8 +553,8 @@ def streaming_ivfpq_maintain(spark: SparkSession, vectors_path: str,
          .start())
     q.awaitTermination()
     if not fsio.exists(spark, alerts_dir):
-        return spark.createDataFrame(
-            [], "batch_id long, cos_means double, rebuilt boolean")
+        return driver_frame(
+            spark, [], "batch_id long, cos_means double, rebuilt boolean")
     return spark.read.parquet(alerts_dir).orderBy("batch_id")
 
 
@@ -809,7 +810,7 @@ def streaming_curate(spark: SparkSession, docs_path: str,
         # direction 2: earlier train postings vs THIS batch's test
         # shingles -- bucket-pruned static IN when bounded, broadcast
         # join beyond (the bm25_index_topk two-lane discipline)
-        cont2 = spark.createDataFrame([], "doc_id long")
+        cont2 = driver_frame(spark, [], "doc_id long")
         if fsio.count_files(spark, post_p):
             post = register_bucketed_path(
                 spark, post_p, post_name, post_cols,
@@ -851,8 +852,8 @@ def streaming_curate(spark: SparkSession, docs_path: str,
     q.awaitTermination()
 
     if not fsio.exists(spark, meta_p):  # empty stream
-        return spark.createDataFrame(
-            [], "lang string, doc_id long, n_tokens int, "
+        return driver_frame(
+            spark, [], "lang string, doc_id long, n_tokens int, "
                 "tokens_before bigint, shard bigint")
     from pyspark.sql import Window
 

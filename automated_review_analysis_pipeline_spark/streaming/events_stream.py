@@ -18,6 +18,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from automated_review_analysis_pipeline_spark.session import driver_frame
+
 
 def read_events_stream(spark: SparkSession, path: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
@@ -188,8 +190,8 @@ def streaming_incremental_rollup(spark: SparkSession, events_path: str,
     v = latest_version(state_dir)
     if v < 0:
         return finalize_rollup(
-            spark.createDataFrame(
-                [], "day_us long, n_events long, __sum decimal(38,6)"))
+            driver_frame(
+                spark, [], "day_us long, n_events long, __sum decimal(38,6)"))
     return finalize_rollup(
         spark.read.parquet(os.path.join(state_dir, f"v{v}")))
 

@@ -27,6 +27,14 @@ from automated_review_analysis_pipeline_spark.operators.multimodal import (
     sample_frames,
 )
 from automated_review_analysis_pipeline_spark.plans.survey_pipeline import analyze_wide
+from automated_review_analysis_pipeline_spark.session import driver_frame
+
+
+def _assert_no_rdd(df):
+    """A frame built from driver data is an Arrow LocalRelation: no
+    pickled LogicalRDD, so no Python worker reads it."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
 
 
 def _counting_kernel(marker_dir):
@@ -51,6 +59,7 @@ def _counting_kernel(marker_dir):
 def test_cache_dedups_and_is_idempotent(spark, tmp_path):
     cache_path = str(tmp_path / "cache_parquet")
     marker = str(tmp_path / "calls")
+    _assert_no_rdd(load_cache(spark, cache_path))
     keys = spark.createDataFrame(
         [("retail", "q1", "love it")] * 5 + [("retail", "q1", "meh")] * 3,
         KEY_COLS)
@@ -58,6 +67,7 @@ def test_cache_dedups_and_is_idempotent(spark, tmp_path):
                               cache_path)
     assert out.count() == 2          # distinct keys only
     assert len(os.listdir(marker)) == 2   # dedup-before-compute (C7)
+    _assert_no_rdd(out)
 
     # second run: all hits, zero classifier calls
     out2 = classify_with_cache(keys, _counting_kernel(marker), spark,
@@ -241,6 +251,40 @@ def test_empty_survey_guard(spark):
     )
 
     assert summary_from_wide(wide).count() == 0
+
+    from automated_review_analysis_pipeline_spark.operators.reshape import (
+        melt_sentiments,
+    )
+
+    no_sentiments = melt_sentiments(spark.range(1).select(
+        F.lit("P1").alias("Product")))
+    assert no_sentiments.collect() == []
+    _assert_no_rdd(no_sentiments)
+
+
+def test_driver_frame_keeps_schema(spark, tmp_path):
+    """The one driver-data-to-frame helper keeps the declared schema
+    exactly (nested and decimal types included), plans a LocalRelation,
+    and an empty one writes one schema-bearing file that reads back."""
+    from decimal import Decimal
+
+    ddl = ("a int, b decimal(38,9), c array<string>, d map<string,int>, "
+           "e struct<x:int,y:string>")
+    want = spark.createDataFrame([], ddl).schema
+    row = (1, Decimal("1.5"), ["x"], {"k": 2}, (3, "y"))
+    full = driver_frame(spark, [row, (None,) * 5], ddl)
+    assert full.schema == want
+    assert [tuple(r) for r in full.collect()] == [
+        (1, Decimal("1.500000000"), ["x"], {"k": 2}, (3, "y")),
+        (None,) * 5]
+    _assert_no_rdd(full)
+    empty = driver_frame(spark, [], want)
+    assert empty.schema == want
+    _assert_no_rdd(empty)
+    out = str(tmp_path / "empty")
+    empty.write.parquet(out)
+    assert len([f for f in os.listdir(out) if f.endswith(".parquet")]) == 1
+    assert spark.read.parquet(out).schema == want
 
 
 def test_excel_sheet_rows_sorted_lexicographically(spark, tmp_path):
