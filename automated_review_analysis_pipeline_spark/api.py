@@ -83,12 +83,13 @@ def run(
 
     With a ``cache`` path the memo cache is consulted and extended in
     BOTH modes, exactly like the reference's get_sent_cat
-    (survey_analysis.py:257-273): distinct non-filler keys anti-join the
-    parquet cache table, only misses reach the classifier, and a
+    (survey_analysis.py:257-273): distinct non-filler keys are looked up
+    in the parquet cache table, only misses reach the classifier, and a
     migrated reference .analysis_cache.json (import_json_cache)
     short-circuits every classification it already paid for.
-    ``max_parallelism`` bounds API-mode concurrency; ``cache=None``
-    classifies inline (the reference with caching disabled)."""
+    ``max_parallelism`` bounds API-mode concurrency (requests in flight
+    from the driver); ``cache=None`` classifies inline (the reference
+    with caching disabled)."""
     from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
         analyze_wide_cached,
     )
@@ -136,9 +137,10 @@ def main() -> None:
     p.add_argument("--cache", default=".analysis_cache_parquet")
     p.add_argument("--max-chars", type=int, default=600)
     p.add_argument("--max-parallelism", type=int, default=None,
-                   help="bound API-mode concurrency (partitions of the "
-                        "cache-miss classify stage); default: session "
-                        "parallelism")
+                   help="bound API-mode concurrency: concurrent API "
+                        "streams, at most this many requests in flight "
+                        "(1 = the reference's sequential loop); default: "
+                        "session parallelism")
     p.add_argument("--import-cache", default=None, metavar="JSON",
                    help="migrate a reference .analysis_cache.json into "
                         "the parquet cache before running (idempotent)")

@@ -7,29 +7,33 @@ category) in a JSON dict, consulted before every classifier call and
 flushed every 200 new entries. On the bundled data that's a ~7.4x
 reduction in classifier invocations (2 071 non-filler cells -> 278
 distinct). Catalyst will never dedup UDF inputs on its own, so
-:func:`classify_with_cache` reproduces the effect in ONE Spark action:
+:func:`classify_with_cache` reproduces the effect with ONE lookup:
 
-    distinct(keys) --left-anti--> cache --classifier--> misses (tagged)
-    cache --left-semi--> distinct(keys)                = hits (tagged)
-    collect(hits UNION ALL misses); misses --> one file --> cache dir
-    collected rows --> driver frame                    = the result
+    collect(distinct(keys) --left--> cache)   hit = a cache row matched
+    misses --classifier--> values             (API kernel: from the driver)
+    misses + values --> one file --> cache dir
+    hits + misses --> driver frame            = the result
 
 Every frame built here from driver data goes through
 :func:`..session.driver_frame` (Arrow, a ``LocalRelation``): an empty
-cache directory is an empty relation the optimizer prunes (the
-anti-join keeps every key, the hits branch vanishes), and the result,
-the broadcast side of every join back, is collected and broadcast with
-no Spark job and no Python worker. Only the classifier's own stage may
-start one.
+cache directory is an empty relation the optimizer prunes (the left
+join keeps every key as a miss), and the result, the broadcast side of
+every join back, is collected and broadcast with no Spark job and no
+Python worker.
 
 The classifier is the survey plans' column contract,
 ``classifier(question: Column, answer: Column) -> struct<sentiment,
 category>``, applied once to the miss set with the question as a column:
-one bulk pass over the distinct texts of every question.
+one bulk pass over the distinct texts of every question. A kernel may
+also carry a driver form, ``classify_batch(pairs, max_parallelism)``
+(the API kernel, operators/classify.llm_kernel): I/O-bound requests go
+out from driver threads, so the cached API path starts no Python worker
+either.
 
-Idempotence comes free: a re-run anti-joins everything away, classifies
-zero rows and appends nothing (the reference needed incremental flushing
-for crash-resume; an atomic rename of the one miss file subsumes it).
+Idempotence comes free: a re-run finds every key in the cache,
+classifies zero rows and appends nothing (the reference needed
+incremental flushing for crash-resume; an atomic rename of the one miss
+file subsumes it).
 """
 
 from __future__ import annotations
@@ -45,8 +49,8 @@ from pyspark.sql import functions as F
 
 from automated_review_analysis_pipeline_spark.session import driver_frame
 
-CACHE_SCHEMA = ("industry string, question string, answer string, "
-                "sentiment string, category string")
+KEY_SCHEMA = "industry string, question string, answer string"
+CACHE_SCHEMA = KEY_SCHEMA + ", sentiment string, category string"
 
 KEY_COLS = ["industry", "question", "answer"]
 VAL_COLS = ["sentiment", "category"]
@@ -122,22 +126,24 @@ def import_json_cache(spark: SparkSession, json_path: str,
         return 0
     fresh = driver_frame(spark, rows, CACHE_SCHEMA).distinct().join(
         load_cache(spark, cache_path), KEY_COLS, "left_anti").collect()
-    _append(cache_path, [r.asDict() for r in fresh])
+    _append(cache_path, fresh)
     return len(fresh)
 
 
-def _append(cache_path: str, rows: list[dict]) -> None:
-    """The cache's one writer: ``rows`` become ONE parquet file written
-    on the driver under a hidden temp name that does not end in
-    ``.parquet`` (load_cache and compact_cache skip it), then renamed
-    into place, so a reader sees all of the file or none of it. No rows,
-    no file."""
+def _append(cache_path: str, rows: list[tuple]) -> None:
+    """The cache's one writer: ``rows``, KEY_COLS + VAL_COLS tuples,
+    become ONE parquet file written on the driver under a hidden temp
+    name that does not end in ``.parquet`` (load_cache and compact_cache
+    skip it), then renamed into place, so a reader sees all of the file
+    or none of it. No rows, no file."""
     if not rows:
         return
     part = f"part-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(cache_path, f".{part}.tmp")
     os.makedirs(cache_path, exist_ok=True)
-    pq.write_table(pa.Table.from_pylist(rows, ARROW_SCHEMA), tmp)
+    pq.write_table(pa.Table.from_arrays(
+        [pa.array(col, pa.string()) for col in zip(*rows)],
+        schema=ARROW_SCHEMA), tmp)
     os.replace(tmp, os.path.join(cache_path, part))
 
 
@@ -256,34 +262,49 @@ def classify_with_cache(
     extending the cache table. Returns KEY_COLS + VAL_COLS for every input
     key. ``keys`` may contain duplicates; they are collapsed first.
 
-    With ``cache_path``, one collect returns hits (through load_cache,
-    so duplicate keys collapse) and classified misses; the misses are
+    With ``cache_path``, one collect returns every distinct key
+    left-joined to load_cache (so duplicate cache keys collapse): a key
+    with a cache row is a hit, one without is a miss. Only the misses are
+    classified, none on a warm run. A kernel with a driver form
+    (``classifier.classify_batch``, the API kernel) sends their requests
+    from the driver, at most ``max_parallelism`` in flight (default: the
+    session's default parallelism); any other kernel classifies them in
+    one more action, over a driver frame of the misses. The misses are
     appended as one parquet file (none if every key hits) and the result
-    is a driver frame over the collected rows (a ``LocalRelation``, so
+    is a driver frame over the rows (a ``LocalRelation``, so
     broadcasting it to the join backs runs no job and starts no Python
-    worker). Without it every distinct key is classified lazily in the
-    returned plan.
+    worker). Without ``cache_path`` every distinct key is classified
+    lazily in the returned plan.
 
-    ``max_parallelism`` bounds API-mode concurrency: the miss set is
-    repartitioned to that many partitions before the classifier UDF, so at
-    most that many concurrent request streams hit the endpoint (the
-    reference's single sequential loop, survey_analysis.py:189-217, is the
-    rate-limit precedent -- ``max_parallelism=1`` reproduces it; None
-    leaves the shuffle-parallelism default)."""
+    In a plan, ``max_parallelism`` is the miss set's partition count
+    before the classifier, so a UDF kernel runs at most that many
+    concurrent streams (the reference's single sequential loop,
+    survey_analysis.py:189-217, is the rate-limit precedent --
+    ``max_parallelism=1`` reproduces it; None leaves the
+    shuffle-parallelism default)."""
+
+    def classified(misses: DataFrame) -> DataFrame:
+        if max_parallelism is not None:
+            misses = misses.repartition(max_parallelism)
+        return misses.select(
+            *KEY_COLS,
+            classifier(F.col("question"), F.col("answer")).alias("__r"),
+        ).select(*KEY_COLS, *[F.col(f"__r.{c}").alias(c) for c in VAL_COLS])
+
     distinct_keys = keys.select(*KEY_COLS).distinct()
-    misses = distinct_keys
-    if cache_path:
-        cache = load_cache(spark, cache_path)
-        misses = misses.join(cache, KEY_COLS, "left_anti")
-    if max_parallelism is not None:
-        misses = misses.repartition(max_parallelism)
-    computed = misses.select(
-        *KEY_COLS, classifier(F.col("question"), F.col("answer")).alias("__r")
-    ).select(*KEY_COLS, *[F.col(f"__r.{c}").alias(c) for c in VAL_COLS])
     if not cache_path:
-        return computed
-    hits = cache.join(distinct_keys, KEY_COLS, "left_semi")
-    rows = hits.withColumn("__miss", F.lit(False)).unionByName(
-        computed.withColumn("__miss", F.lit(True))).collect()
-    _append(cache_path, [r.asDict() for r in rows if r["__miss"]])
-    return driver_frame(spark, [r[:-1] for r in rows], CACHE_SCHEMA)
+        return classified(distinct_keys)
+    rows = distinct_keys.join(
+        load_cache(spark, cache_path).withColumn("__hit", F.lit(True)),
+        KEY_COLS, "left").collect()
+    hits = [r[:-1] for r in rows if r["__hit"]]
+    misses = [r[:3] for r in rows if not r["__hit"]]
+    batch = getattr(classifier, "classify_batch", None)
+    if misses and batch is not None:
+        values = batch([r[1:] for r in misses], max_parallelism
+                       or spark.sparkContext.defaultParallelism)
+        misses = [r + tuple(v) for r, v in zip(misses, values)]
+    elif misses:
+        misses = classified(driver_frame(spark, misses, KEY_SCHEMA)).collect()
+    _append(cache_path, misses)
+    return driver_frame(spark, hits + misses, CACHE_SCHEMA)

@@ -3,7 +3,7 @@
 Three interchangeable engines, same contract as the deterministic column
 kernels in functions/classify.py but running as Arrow-batched pandas UDFs
 (the slow path -- used only when the semantics genuinely need Python or an
-API call):
+API call; the API kernel's cached path sends its requests from the driver):
 
 - vader_kernel     : C1, VADER compound score with contrast-word Mixed rule
                      (survey_analysis.py:118-129); falls back to the
@@ -12,8 +12,9 @@ API call):
 - llm_kernel       : C5+C6, OpenAI-compatible chat completion with 5-try
                      exponential backoff (1s doubling, 8s cap) and the
                      (Neutral, No Feedback) failure default
-                     (survey_analysis.py:171-217). Builds its client INSIDE
-                     the UDF (per executor); prompt text preserved.
+                     (survey_analysis.py:171-217); prompt text preserved.
+                     Also a driver batch form (``classify_batch``) for the
+                     memo cache's misses.
 - stub_kernel      : deterministic fake with the same plumbing -- tests and
                      demo runs exercise batching/retry paths at zero cost.
 
@@ -21,17 +22,22 @@ Every kernel is a ``classifier(question: Column, answer: Column) ->
 struct<sentiment string, category string>`` column function -- the one
 classifier contract of plans/survey_pipeline and operators/cache.
 
-Scale: Arrow batch size rides spark.sql.execution.arrow.maxRecordsPerBatch;
-API-mode concurrency is bounded by partition count (`repartition(n)` before
-the classify stage = n concurrent API streams, the engine's replacement for
-the reference's single sequential request loop).
+Scale: Arrow batch size rides spark.sql.execution.arrow.maxRecordsPerBatch.
+API-mode concurrency is ``max_parallelism`` request threads on the driver
+(n = at most n requests in flight, the engine's replacement for the
+reference's single sequential request loop): the requests are I/O-bound,
+so executors are no help, and a pandas-UDF stage would cost a Python
+worker launch plus an Arrow round trip per report.
 """
 
 from __future__ import annotations
 
+import json
 import sys
+import threading
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import Column
@@ -50,6 +56,10 @@ from automated_review_analysis_pipeline_spark.operators.cache import Classifier
 _FILLER = set(FILLER_VALUES)
 
 RESULT_TYPE = "sentiment string, category string"
+
+# the result of a filler answer and of a key whose every try failed
+# (survey_analysis.py:171-217, :284-285)
+NO_FEEDBACK = ("Neutral", "No Feedback")
 
 # C5 prompt text, byte-identical to the reference's literals
 # (survey_analysis.py:182-187) -- with a real key, classifications must
@@ -179,80 +189,108 @@ def llm_kernel(
     - terminal failure -> ("Neutral", "No Feedback") + stderr warning
     - empty category -> "No Feedback"
 
-    The question rides in as a column next to the answer, so one UDF
-    serves every question (the raw header text goes into each request,
-    as the reference sends it).
+    One request body, ``classify_one``, in two forms:
+
+    - ``classifier.classify_batch(pairs, max_parallelism)``, the driver
+      form: classify_with_cache sends a cache pass's misses through it.
+      A pool of ``max_parallelism`` threads, one client each, sends the
+      requests from the driver -- at most that many in flight, 1 being
+      the reference's sequential loop -- so no Python worker starts and
+      nothing crosses to Arrow. Results come back in ``pairs`` order;
+      one stderr line counts the keys that fell back to the default.
+    - the classifier itself, the Column form: one two-column pandas UDF
+      that builds a client per task. Only inline ``analyze_wide``
+      (no cache) uses it; the question rides in as a column next to the
+      answer, so one UDF serves every question.
 
     ``client_factory`` injects an OpenAI-compatible client builder (tests
-    pass a fake; production default constructs the real one per executor);
+    pass a fake; production default constructs the real one);
     ``base_delay`` scales the backoff (tests set ~0 to avoid sleeping).
     """
+
+    def make_client():
+        try:
+            if client_factory is not None:
+                return client_factory()
+            from openai import OpenAI  # type: ignore
+            kwargs = {"base_url": api_base} if api_base else {}
+            return OpenAI(**kwargs)
+        except Exception:
+            return None
+
+    def classify_one(client, question: str, ans: str
+                     ) -> tuple[str, str] | None:
+        """One key's classification; None when it falls back to
+        NO_FEEDBACK (no client, or every try failed)."""
+        # In-kernel filler guard: the plan's when/otherwise picks the
+        # right OUTPUT for filler rows, but Spark hoists Python UDFs
+        # into an ArrowEvalPython stage that runs for ALL rows --
+        # without this check filler rows would still cost an API call
+        # (the reference's P3 saved ~17% of calls).
+        if (ans or "").strip().lower() in _FILLER:
+            return NO_FEEDBACK
+        if client is None:
+            return None
+        delay = base_delay
+        for attempt in range(max_retries):
+            try:
+                resp = client.chat.completions.create(
+                    model=model,
+                    temperature=0.1,
+                    max_tokens=max_tokens,
+                    response_format={"type": "json_object"},
+                    messages=[
+                        {"role": "system", "content": SYS_PROMPT},
+                        {"role": "user", "content":
+                         build_user_prompt(industry, question, ans)},
+                    ],
+                )
+                content = resp.choices[0].message.content or "{}"
+                data = json.loads(content)
+                sentiment = _normalize_sentiment(
+                    str(data.get("sentiment", "Neutral")))
+                category = (data.get("category") or "No Feedback").strip()
+                return sentiment, category or "No Feedback"
+            except Exception as e:
+                if attempt == max_retries - 1:
+                    print(f"LLM classify failed after {max_retries} "
+                          f"tries: {e}", file=sys.stderr)
+                    return None
+                time.sleep(delay)
+                delay = min(delay * 2, 8.0 * base_delay)
+        return None
 
     @pandas_udf(RESULT_TYPE)
     def _llm(batches: Iterator[tuple[pd.Series, pd.Series]]
              ) -> Iterator[pd.DataFrame]:
-        import json
-
-        try:
-            if client_factory is not None:
-                client = client_factory()
-            else:
-                from openai import OpenAI  # type: ignore
-                kwargs = {"base_url": api_base} if api_base else {}
-                client = OpenAI(**kwargs)
-        except Exception:
-            client = None
-
-        def classify_one(question: str, ans: str) -> tuple[str, str]:
-            # In-UDF filler guard: the plan's when/otherwise picks the
-            # right OUTPUT for filler rows, but Spark hoists Python
-            # UDFs into an ArrowEvalPython stage that runs for ALL
-            # rows -- without this check filler rows would still cost
-            # an API call (the reference's P3 saved ~17% of calls).
-            if (ans or "").strip().lower() in _FILLER:
-                return "Neutral", "No Feedback"
-            if client is None:
-                return "Neutral", "No Feedback"
-            delay = base_delay
-            for attempt in range(max_retries):
-                try:
-                    resp = client.chat.completions.create(
-                        model=model,
-                        temperature=0.1,
-                        max_tokens=max_tokens,
-                        response_format={"type": "json_object"},
-                        messages=[
-                            {"role": "system", "content": SYS_PROMPT},
-                            {"role": "user", "content":
-                             build_user_prompt(industry, question, ans)},
-                        ],
-                    )
-                    content = resp.choices[0].message.content or "{}"
-                    data = json.loads(content)
-                    sentiment = _normalize_sentiment(
-                        str(data.get("sentiment", "Neutral")))
-                    category = (data.get("category")
-                                or "No Feedback").strip()
-                    if not category:
-                        category = "No Feedback"
-                    return sentiment, category
-                except Exception as e:
-                    if attempt == max_retries - 1:
-                        print(f"LLM classify failed after {max_retries} "
-                              f"tries: {e}", file=sys.stderr)
-                        return "Neutral", "No Feedback"
-                    time.sleep(delay)
-                    delay = min(delay * 2, 8.0 * base_delay)
-            return "Neutral", "No Feedback"
-
+        client = make_client()
         for questions, answers in batches:
-            pairs = [classify_one(str(q), str(a))
+            pairs = [classify_one(client, str(q), str(a)) or NO_FEEDBACK
                      for q, a in zip(questions, answers.fillna(""))]
             yield pd.DataFrame(pairs, columns=["sentiment", "category"])
+
+    def classify_batch(pairs: list[tuple[str, str]], max_parallelism: int
+                       ) -> list[tuple[str, str]]:
+        local = threading.local()
+
+        def one(pair: tuple[str, str]) -> tuple[str, str] | None:
+            if not hasattr(local, "client"):
+                local.client = make_client()
+            return classify_one(local.client, *pair)
+
+        with ThreadPoolExecutor(max_workers=max_parallelism) as pool:
+            results = list(pool.map(one, pairs))
+        failed = results.count(None)
+        if failed:
+            print(f"[warn] LLM classify: {failed} of {len(pairs)} keys fell "
+                  f"back to {NO_FEEDBACK} (no client, or all {max_retries} "
+                  "tries failed)", file=sys.stderr)
+        return [r or NO_FEEDBACK for r in results]
 
     def classifier(question: Column, answer: Column) -> Column:
         return _llm(question, answer)
 
+    classifier.classify_batch = classify_batch
     # P6: only API-bound text is truncated to max_chars
     # (survey_analysis.py:264-265); the survey plans read this flag
     classifier.truncate_input = True

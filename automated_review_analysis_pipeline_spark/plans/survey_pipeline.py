@@ -17,7 +17,7 @@ applies it inline per question column with ``F.lit(question)``;
 :func:`analyze_wide_cached` stacks the cleaned answers into one
 (industry, question, answer) key frame and hands it to
 operators/cache.classify_with_cache -- the single memo-cache
-implementation, one Spark action -- then joins every question back to
+implementation, one cache lookup -- then joins every question back to
 ONE broadcast of the results (one BroadcastExchange, Q-1 reuses).
 
 Plan-construction discipline:
@@ -103,11 +103,19 @@ def _api_bound(classifier: Classifier, max_chars: int) -> Classifier:
     kernel) sees only the first ``max_chars`` characters, like the
     reference's ``ans_for_api = ans[:max_chars]``
     (survey_analysis.py:264-265); the demo/VADER kernels score the full
-    cleaned answer (:263)."""
+    cleaned answer (:263). The kernel's driver form gets the same cut:
+    ``answer[:max_chars]`` counts code points, like ``F.substring``."""
     if not getattr(classifier, "truncate_input", False):
         return classifier
-    return lambda question, answer: classifier(
-        question, F.substring(answer, 1, max_chars))
+
+    def bounded(question: Column, answer: Column) -> Column:
+        return classifier(question, F.substring(answer, 1, max_chars))
+
+    batch = getattr(classifier, "classify_batch", None)
+    if batch is not None:
+        bounded.classify_batch = lambda pairs, n: batch(
+            [(q, a[:max_chars]) for q, a in pairs], n)
+    return bounded
 
 
 def _finalize_wide(df: DataFrame, bases: list[str],
@@ -178,19 +186,19 @@ def analyze_wide_cached(
     """analyze_wide with the reference's memo cache wired in (C7,
     survey_analysis.py:257-273): every distinct non-filler (industry,
     question-header, answer) key is classified ONCE through
-    classify_with_cache -- one action: hits and classified misses in one
-    collect, misses appended as one file -- and every question joins
-    back to one broadcast of those results. Filler rows never enter the
-    cache (the reference short-circuits BEFORE get_sent_cat, :284-285),
-    and the cache key carries the FULL cleaned answer while only
-    API-bound text is truncated (:259, :264-265).
+    classify_with_cache -- one collect looks every key up in the cache,
+    only misses are classified and appended as one file -- and every
+    question joins back to one broadcast of those results. Filler rows
+    never enter the cache (the reference short-circuits BEFORE
+    get_sent_cat, :284-285), and the cache key carries the FULL cleaned
+    answer while only API-bound text is truncated (:259, :264-265).
 
     This is the plan the CLI runs when a cache path is configured, in
     BOTH modes (the reference consults the cache before VADER too) -- a
     reference user's migrated .analysis_cache.json (import_json_cache)
     short-circuits every already-paid classification. ``max_parallelism``
-    bounds API-mode concurrency (classify_with_cache repartitions the
-    miss set; default: the session's default parallelism).
+    bounds API-mode concurrency: at most that many requests in flight
+    from the driver (default: the session's default parallelism).
 
     The results are the collected distinct-key rows, so the plan holds
     no cached relation and no reference to the cache files. Every join
@@ -213,7 +221,7 @@ def analyze_wide_cached(
     ).where(~is_filler(F.col("answer")))
     results = F.broadcast(classify_with_cache(
         keys, _api_bound(classifier, max_chars), spark, cache_path,
-        max_parallelism or spark.sparkContext.defaultParallelism,
+        max_parallelism,
     ).select(F.struct("question", "answer").alias("__key"),
              F.col("sentiment").alias("__s"), F.col("category").alias("__c")))
 

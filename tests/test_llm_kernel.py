@@ -10,25 +10,27 @@ reference to a module the workers cannot import).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
+from automated_review_analysis_pipeline_spark.operators.cache import load_cache
 from automated_review_analysis_pipeline_spark.operators.classify import (
     RESULT_TYPE,
     llm_kernel,
 )
-from automated_review_analysis_pipeline_spark.plans.survey_pipeline import analyze_wide
+from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
+    analyze_wide,
+    analyze_wide_cached,
+)
 
 
-def _make_factory(fail_first: int = 0, always_fail: bool = False,
-                  marker_dir: str | None = None):
+def _make_factory(marker_dir: str | None = None):
     def factory():
         import json as _json
-
-        state = {"calls": 0}
 
         class _Resp:
             def __init__(self, content):
@@ -37,15 +39,10 @@ def _make_factory(fail_first: int = 0, always_fail: bool = False,
 
         class _Completions:
             def create(self, **kwargs):
-                state["calls"] += 1
                 if marker_dir:
                     import uuid
                     open(os.path.join(marker_dir, uuid.uuid4().hex),
                          "w").close()
-                if always_fail:
-                    raise RuntimeError("simulated outage")
-                if state["calls"] <= fail_first:
-                    raise RuntimeError("simulated 429")
                 user = kwargs["messages"][1]["content"]
                 answer = [ln for ln in user.splitlines()
                           if ln.startswith("Answer: ")][0][8:]
@@ -89,25 +86,6 @@ def test_llm_kernel_parses_and_normalizes(spark):
     assert by_ans["empty-cat here"]["Q1_Category"] == "No Feedback"
     # unknown sentiment label -> Neutral (normalize_sentiment)
     assert by_ans["plain words"]["Q1_Sentiment"] == "Neutral"
-
-
-def test_llm_kernel_retries_then_succeeds(spark):
-    kernel = llm_kernel("retail", client_factory=_make_factory(fail_first=2),
-                        base_delay=0.001)
-    wide, _ = analyze_wide(_survey(spark, ["love it"]), classifier=kernel)
-    r = wide.collect()[0]
-    assert r["Q1_Sentiment"] == "Positive"  # survived 2 simulated 429s
-
-
-def test_llm_kernel_terminal_failure_default(spark):
-    kernel = llm_kernel("retail",
-                        client_factory=_make_factory(always_fail=True),
-                        max_retries=3, base_delay=0.001)
-    wide, _ = analyze_wide(_survey(spark, ["anything at all"]),
-                           classifier=kernel)
-    r = wide.collect()[0]
-    assert r["Q1_Sentiment"] == "Neutral"
-    assert r["Q1_Category"] == "No Feedback"
 
 
 def test_prompt_text_matches_reference_verbatim(spark, tmp_path):
@@ -235,3 +213,95 @@ def test_llm_kernel_filler_short_circuit_skips_api(spark, tmp_path):
     assert rows["a real answer"]["Q1_Category"] == "General"
     # exactly ONE api call: the three filler rows were skipped in-kernel
     assert len(os.listdir(marker)) == 1
+
+
+def test_driver_form_bounds_requests_in_flight(spark):
+    """The driver form sends at most max_parallelism requests at once,
+    one client per thread, and maps each result to its own key. A
+    barrier of max_parallelism parties makes every wave reach the bound.
+    No Spark job runs."""
+    import threading
+
+    for n in (1, 3):
+        lock = threading.Lock()
+        barrier = threading.Barrier(n, timeout=10)
+        state = {"inflight": 0, "max": 0, "clients": 0}
+
+        def factory():
+            with lock:
+                state["clients"] += 1
+
+            class _Completions:
+                def create(self, **kwargs):
+                    with lock:
+                        state["inflight"] += 1
+                        state["max"] = max(state["max"], state["inflight"])
+                    barrier.wait()
+                    with lock:
+                        state["inflight"] -= 1
+                    answer = kwargs["messages"][1]["content"].split(
+                        "Answer: ")[1].split("\n")[0]
+                    msg = type("M", (), {"content": json.dumps(
+                        {"sentiment": "Mixed", "category": answer})})
+                    return type("R", (), {"choices": [
+                        type("C", (), {"message": msg})]})
+
+            return type("Client", (), {"chat": type(
+                "Chat", (), {"completions": _Completions()})()})()
+
+        kernel = llm_kernel("retail", client_factory=factory)
+        pairs = [(f"q{i % 2}", f"answer {i}") for i in range(3 * n)]
+        assert kernel.classify_batch(pairs, n) == \
+            [("Mixed", a) for _, a in pairs]
+        assert state["max"] == n and state["clients"] == n
+
+
+def test_driver_form_matches_column_form(spark, tmp_path, capsys):
+    """The driver form (analyze_wide_cached) and the Column form
+    (inline analyze_wide) give the same values for a 429-then-success
+    key, an always-failing key and an answer past max_chars with
+    non-ASCII text, which both forms cut to the same code points; the
+    cache row keeps the full answer, and the driver counts the one
+    fallback on stderr."""
+    long_answer = "Précis: " + "日本語のテキスト " * 3 + "ünïcödé tail"
+    max_chars = 14      # cuts inside the Japanese run
+
+    def factory():
+        seen = set()
+
+        class _Completions:
+            def create(self, **kwargs):
+                answer = kwargs["messages"][1]["content"].split(
+                    "Answer: ")[1].split("\nSentiment must")[0]
+                if answer == "always down":
+                    raise RuntimeError("simulated outage")
+                if answer == "retry me" and answer not in seen:
+                    seen.add(answer)
+                    raise RuntimeError("simulated 429")
+                msg = type("M", (), {"content": json.dumps(
+                    {"sentiment": "negative", "category": answer})})
+                return type("R", (), {"choices": [
+                    type("C", (), {"message": msg})]})
+
+        return type("Client", (), {"chat": type(
+            "Chat", (), {"completions": _Completions()})()})()
+
+    kernel = llm_kernel("retail", client_factory=factory, base_delay=0.001)
+    survey = _survey(spark, ["retry me", "always down", long_answer])
+    column, _ = analyze_wide(survey, classifier=kernel, max_chars=max_chars)
+    cache = str(tmp_path / "cache")
+    driver, _ = analyze_wide_cached(survey, kernel, "retail", cache,
+                                    max_chars=max_chars)
+
+    def values(wide):
+        return {r["Q1_Answer"]: (r["Q1_Sentiment"], r["Q1_Category"])
+                for r in wide.collect()}
+
+    got = values(driver)
+    assert got == values(column)
+    assert got == {"retry me": ("Negative", "retry me"),
+                   "always down": ("Neutral", "No Feedback"),
+                   long_answer: ("Negative", long_answer[:max_chars])}
+    assert "1 of 3 keys fell back" in capsys.readouterr().err
+    cached = {r["answer"] for r in load_cache(spark, cache).collect()}
+    assert cached == {"retry me", "always down", long_answer}
