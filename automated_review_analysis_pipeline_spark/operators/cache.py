@@ -1,4 +1,4 @@
-"""Classification memo cache as a join (reference C7,
+"""Classification memo cache read into a driver dict (reference C7,
 survey_analysis.py:145-165, 251-273) -- the reference's single most
 important efficiency mechanism, and the engine's ONE implementation of it.
 
@@ -7,19 +7,19 @@ category) in a JSON dict, consulted before every classifier call and
 flushed every 200 new entries. On the bundled data that's a ~7.4x
 reduction in classifier invocations (2 071 non-filler cells -> 278
 distinct). Catalyst will never dedup UDF inputs on its own, so
-:func:`classify_with_cache` reproduces the effect with ONE lookup:
+:func:`classify_with_cache` reproduces the effect with ONE Spark action:
 
-    collect(distinct(keys) --left--> cache)   hit = a cache row matched
+    cache dir --pyarrow--> dict               one row per key, last write wins
+    collect(distinct(keys)), probe the dict   hit = a key in the dict
     misses --classifier--> values             (API kernel: from the driver)
     misses + values --> one file --> cache dir
     hits + misses --> driver frame            = the result
 
-Every frame built here from driver data goes through
-:func:`..session.driver_frame` (Arrow, a ``LocalRelation``): an empty
-cache directory is an empty relation the optimizer prunes (the left
-join keeps every key as a miss), and the result, the broadcast side of
-every join back, is collected and broadcast with no Spark job and no
-Python worker.
+The cache lives on a local filesystem (os.replace, pq.write_table), so
+it is read on the driver like the reference's dict: no Spark plan reads
+it. The result, the broadcast side of every join back, is a
+:func:`..session.driver_frame` (Arrow, a ``LocalRelation``), collected
+and broadcast with no Spark job and no Python worker.
 
 The classifier is the survey plans' column contract,
 ``classifier(question: Column, answer: Column) -> struct<sentiment,
@@ -38,7 +38,10 @@ file subsumes it).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 
@@ -60,32 +63,37 @@ ARROW_SCHEMA = pa.schema([(c, pa.string()) for c in KEY_COLS + VAL_COLS])
 Classifier = Callable[[Column, Column], Column]
 
 
-def load_cache(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet cache table; missing/empty -> empty frame (the reference
-    tolerates a missing/corrupt cache file the same way,
-    survey_analysis.py:145-153). The empty frame is a driver frame, an
-    empty ``LocalRelation`` the optimizer prunes from every plan over it
-    (a pickled empty list cost a job of defaultParallelism Python
-    tasks per action).
+def read_cache(path: str) -> dict[tuple, tuple]:
+    """The cache directory's ``*.parquet`` files (Spark-written part files
+    too, hidden temp files never) as a dict key -> (sentiment, category),
+    read with pyarrow; no directory is an empty cache (the reference
+    tolerates a missing cache file, survey_analysis.py:145-153). Two
+    concurrent runs can append the same key (the reference's JSON dict
+    could not hold a duplicate; append-only parquet can): the last row in
+    sorted file-name order, then row order, wins -- deterministic
+    last-write-wins, like reference processes overwriting each other."""
+    _recover_interrupted_compaction(path)
+    return _read(_files(path))
 
-    Keys are deduplicated on read: two concurrent runs over an empty
-    cache can both classify the same miss set and both append (the
-    reference's JSON dict could never hold duplicate keys; the
-    append-only parquet design can), and a duplicated key would fan out
-    every later broadcast join. One row per key survives, arbitrarily --
-    the same last-write-wins outcome as concurrent reference processes
-    overwriting each other's JSON. The declared schema fixes the column
-    order and spares a footer-reading schema-inference job."""
-    try:
-        _recover_interrupted_compaction(path)
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            return spark.read.schema(CACHE_SCHEMA).parquet(path) \
-                .dropDuplicates(KEY_COLS)
-    except OSError:
-        pass
-    return driver_frame(spark, [], CACHE_SCHEMA)
+
+def _files(path: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _read(files: list[str]) -> dict[tuple, tuple]:
+    out: dict[tuple, tuple] = {}
+    for f in files:
+        t = pq.ParquetFile(f).read(columns=KEY_COLS + VAL_COLS)
+        for i, q, a, s, c in zip(*(col.to_pylist() for col in t.columns)):
+            out[(i, q, a)] = (s, c)
+    return out
+
+
+def load_cache(spark: SparkSession, path: str) -> DataFrame:
+    """:func:`read_cache` as a driver frame, one row per key (an empty
+    ``LocalRelation`` when there is no cache); runs no Spark job."""
+    return driver_frame(spark, [k + v for k, v in read_cache(path).items()],
+                        CACHE_SCHEMA)
 
 
 def _recover_interrupted_compaction(path: str) -> None:
@@ -107,25 +115,21 @@ def import_json_cache(spark: SparkSession, json_path: str,
     ``{"industry|||question|||answer": [sentiment, category], ...}`` --
     keys split on the literal ``|||`` delimiter (answer may itself
     contain anything except the delimiter, same contract as the
-    reference's cache_key). Already-imported keys are skipped (anti-join
-    idempotence, like every other cache write) and the new entries are
+    reference's cache_key). Already-imported keys are skipped (the same
+    idempotence as every other cache write) and the new entries are
     appended as one file, none when every key is already present.
     Returns the number of newly imported entries."""
-    import json
-
     with open(json_path, encoding="utf-8") as f:
         raw = json.load(f)
-    rows = []
+    cached = read_cache(cache_path)
+    fresh = []
     for key, val in raw.items():
-        parts = key.split("|||", 2)
+        parts = tuple(key.split("|||", 2))
         if len(parts) != 3 or not isinstance(val, (list, tuple)) \
                 or len(val) < 2:
             continue  # tolerate corrupt entries like the reference loader
-        rows.append((parts[0], parts[1], parts[2], str(val[0]), str(val[1])))
-    if not rows:
-        return 0
-    fresh = driver_frame(spark, rows, CACHE_SCHEMA).distinct().join(
-        load_cache(spark, cache_path), KEY_COLS, "left_anti").collect()
+        if parts not in cached:
+            fresh.append(parts + (str(val[0]), str(val[1])))
     _append(cache_path, fresh)
     return len(fresh)
 
@@ -133,7 +137,7 @@ def import_json_cache(spark: SparkSession, json_path: str,
 def _append(cache_path: str, rows: list[tuple]) -> None:
     """The cache's one writer: ``rows``, KEY_COLS + VAL_COLS tuples,
     become ONE parquet file written on the driver under a hidden temp
-    name that does not end in ``.parquet`` (load_cache and compact_cache
+    name that does not end in ``.parquet`` (read_cache and compact_cache
     skip it), then renamed into place, so a reader sees all of the file
     or none of it. No rows, no file."""
     if not rows:
@@ -167,15 +171,10 @@ def export_json_cache(spark: SparkSession, cache_path: str,
     too big to collect would also be too big for the reference's JSON
     format this function exists to emit -- keep such caches in parquet
     and skip the export."""
-    import json
-
-    rows = load_cache(spark, cache_path).collect()
     out = {}
-    for r in rows:
-        if any("|||" in (r[c] or "") for c in ("industry", "question")):
-            continue
-        key = f"{r['industry']}|||{r['question']}|||{r['answer']}"
-        out[key] = [r["sentiment"], r["category"]]
+    for (ind, q, ans), (sent, cat) in read_cache(cache_path).items():
+        if not any("|||" in (x or "") for x in (ind, q)):
+            out[f"{ind}|||{q}|||{ans}"] = [sent, cat]
     with open(json_path, "w", encoding="utf-8") as f:
         json.dump(out, f, ensure_ascii=False)
     return len(out)
@@ -186,48 +185,42 @@ def compact_cache(spark: SparkSession, path: str,
     """Rewrite the append-only cache directory as few-files,
     one-row-per-key parquet. Every run with misses appends one parquet
     file (classify_with_cache), so a long-lived cache accumulates small
-    files whose footer reads eventually dominate load_cache planning
-    -- the standard small-files tax, fixed the standard way: periodic
-    compaction (same sizing rule as partitioning.compact_files --
-    ceil(on-disk bytes / target), one coalesce, no shuffle) plus the
-    dedup-on-key rewrite load_cache applies on read, made durable.
+    files whose footer reads eventually dominate read_cache. Compaction
+    writes read_cache's one row per key as ceil(on-disk bytes / target)
+    files (partitioning.compact_files' sizing rule).
 
     Crash-safe swap: the compacted table lands in a sibling ``.tmp``
     directory first, the live directory moves aside, the tmp renames
     in, and only then is the old data deleted -- a crash at any point
     leaves a complete copy on disk (``path`` or ``path + ".compact.old"``),
-    and load_cache/compact_cache automatically restore a stranded
+    and read_cache/compact_cache automatically restore a stranded
     ``.compact.old`` on their next run. Returns the output file count
     (0 = nothing to compact). Idempotent: re-running compacts the
     already-compact table to itself.
 
-    Concurrent appenders are tolerated, not required to stop: the
-    compaction reads an explicit SNAPSHOT of the parquet files present
-    at entry, and any file that lands in ``path`` afterwards -- whether
-    it was swept into ``.compact.old`` by the first rename or appended
-    into a recreated ``path`` between the renames -- is moved back into
-    the live directory before the old copy is deleted. Nothing a
-    concurrent run paid for is ever dropped; the duplicate-key rows a
-    concurrent append can introduce are collapsed by load_cache's
-    dedup-on-read, same as always.
+    Concurrent appenders need not stop: the compaction reads a SNAPSHOT
+    of the parquet files present at entry, and any file that lands in
+    ``path`` later (swept into ``.compact.old`` by the first rename, or
+    appended into a recreated ``path`` between the renames) is moved
+    back into the live directory before the old copy is deleted, so
+    nothing a concurrent run paid for is dropped; read_cache collapses
+    any duplicate key it brings.
     """
-    import glob
-    import shutil
-
     _recover_interrupted_compaction(path)
-    snapshot = sorted(glob.glob(os.path.join(path, "*.parquet"))) \
-        if os.path.isdir(path) else []
+    snapshot = _files(path)
     if not snapshot:
         return 0
-    # read exactly the snapshot files: appends racing the write job must
+    # read exactly the snapshot files: appends racing the rewrite must
     # not be half-included (they are reconciled by filename below)
-    live = spark.read.parquet(*snapshot).dropDuplicates(KEY_COLS)
+    rows = [k + v for k, v in _read(snapshot).items()]
     total = sum(os.path.getsize(f) for f in snapshot)
-    n_files = max(1, -(-total // target_file_bytes))
+    n_files = min(len(rows), max(1, -(-total // target_file_bytes)))
     tmp, old = path + ".compact.tmp", path + ".compact.old"
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    live.coalesce(int(n_files)).write.mode("overwrite").parquet(tmp)
+    os.makedirs(tmp)
+    for i in range(n_files):
+        _append(tmp, rows[i::n_files])
     os.rename(path, old)
     try:
         os.rename(tmp, path)
@@ -248,7 +241,7 @@ def compact_cache(spark: SparkSession, path: str,
             if not os.path.exists(dst):
                 os.rename(f, dst)
     shutil.rmtree(old)
-    return int(n_files)
+    return n_files
 
 
 def classify_with_cache(
@@ -262,19 +255,16 @@ def classify_with_cache(
     extending the cache table. Returns KEY_COLS + VAL_COLS for every input
     key. ``keys`` may contain duplicates; they are collapsed first.
 
-    With ``cache_path``, one collect returns every distinct key
-    left-joined to load_cache (so duplicate cache keys collapse): a key
-    with a cache row is a hit, one without is a miss. Only the misses are
+    With ``cache_path``, one collect returns the distinct keys and each
+    is probed in read_cache's dict: hit or miss. Only misses are
     classified, none on a warm run. A kernel with a driver form
     (``classifier.classify_batch``, the API kernel) sends their requests
     from the driver, at most ``max_parallelism`` in flight (default: the
     session's default parallelism); any other kernel classifies them in
     one more action, over a driver frame of the misses. The misses are
-    appended as one parquet file (none if every key hits) and the result
-    is a driver frame over the rows (a ``LocalRelation``, so
-    broadcasting it to the join backs runs no job and starts no Python
-    worker). Without ``cache_path`` every distinct key is classified
-    lazily in the returned plan.
+    appended as one parquet file (none if every key hits); the result is
+    a driver frame over the rows. Without ``cache_path`` every distinct
+    key is classified lazily in the returned plan.
 
     In a plan, ``max_parallelism`` is the miss set's partition count
     before the classifier, so a UDF kernel runs at most that many
@@ -294,11 +284,10 @@ def classify_with_cache(
     distinct_keys = keys.select(*KEY_COLS).distinct()
     if not cache_path:
         return classified(distinct_keys)
-    rows = distinct_keys.join(
-        load_cache(spark, cache_path).withColumn("__hit", F.lit(True)),
-        KEY_COLS, "left").collect()
-    hits = [r[:-1] for r in rows if r["__hit"]]
-    misses = [r[:3] for r in rows if not r["__hit"]]
+    cached = read_cache(cache_path)
+    found = [tuple(r) for r in distinct_keys.collect()]
+    hits = [k + cached[k] for k in found if k in cached]
+    misses = [k for k in found if k not in cached]
     batch = getattr(classifier, "classify_batch", None)
     if misses and batch is not None:
         values = batch([r[1:] for r in misses], max_parallelism

@@ -32,6 +32,7 @@ worker launch plus an Arrow round trip per report.
 
 from __future__ import annotations
 
+import functools
 import json
 import sys
 import threading
@@ -201,27 +202,26 @@ def llm_kernel(
     - the classifier itself, the Column form: one two-column pandas UDF
       that builds a client per task. Only inline ``analyze_wide``
       (no cache) uses it; the question rides in as a column next to the
-      answer, so one UDF serves every question.
+      answer, so one UDF serves every question. The UDF is built on the
+      first Column call, so building the kernel needs no SparkContext.
 
     ``client_factory`` injects an OpenAI-compatible client builder (tests
-    pass a fake; production default constructs the real one);
+    pass a fake; production default constructs the real one). A client
+    that cannot be built raises, like the reference's mode select
+    (survey_analysis.py:476-485), instead of defaulting every key;
     ``base_delay`` scales the backoff (tests set ~0 to avoid sleeping).
     """
 
     def make_client():
-        try:
-            if client_factory is not None:
-                return client_factory()
-            from openai import OpenAI  # type: ignore
-            kwargs = {"base_url": api_base} if api_base else {}
-            return OpenAI(**kwargs)
-        except Exception:
-            return None
+        if client_factory is not None:
+            return client_factory()
+        from openai import OpenAI  # type: ignore
+        return OpenAI(**({"base_url": api_base} if api_base else {}))
 
     def classify_one(client, question: str, ans: str
                      ) -> tuple[str, str] | None:
         """One key's classification; None when it falls back to
-        NO_FEEDBACK (no client, or every try failed)."""
+        NO_FEEDBACK (every try failed)."""
         # In-kernel filler guard: the plan's when/otherwise picks the
         # right OUTPUT for filler rows, but Spark hoists Python UDFs
         # into an ArrowEvalPython stage that runs for ALL rows --
@@ -229,8 +229,6 @@ def llm_kernel(
         # (the reference's P3 saved ~17% of calls).
         if (ans or "").strip().lower() in _FILLER:
             return NO_FEEDBACK
-        if client is None:
-            return None
         delay = base_delay
         for attempt in range(max_retries):
             try:
@@ -260,7 +258,6 @@ def llm_kernel(
                 delay = min(delay * 2, 8.0 * base_delay)
         return None
 
-    @pandas_udf(RESULT_TYPE)
     def _llm(batches: Iterator[tuple[pd.Series, pd.Series]]
              ) -> Iterator[pd.DataFrame]:
         client = make_client()
@@ -283,12 +280,16 @@ def llm_kernel(
         failed = results.count(None)
         if failed:
             print(f"[warn] LLM classify: {failed} of {len(pairs)} keys fell "
-                  f"back to {NO_FEEDBACK} (no client, or all {max_retries} "
-                  "tries failed)", file=sys.stderr)
+                  f"back to {NO_FEEDBACK} (all {max_retries} tries failed)",
+                  file=sys.stderr)
         return [r or NO_FEEDBACK for r in results]
 
+    @functools.cache
+    def column_udf():
+        return pandas_udf(_llm, RESULT_TYPE)
+
     def classifier(question: Column, answer: Column) -> Column:
-        return _llm(question, answer)
+        return column_udf()(question, answer)
 
     classifier.classify_batch = classify_batch
     # P6: only API-bound text is truncated to max_chars

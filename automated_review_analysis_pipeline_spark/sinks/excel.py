@@ -1,31 +1,30 @@
 """Excel workbook sink (reference K1-K5, survey_analysis.py:360-446).
 
 Excel is inherently a driver-side, small-data sink (1 048 576-row sheet
-cap): the wide DataFrame is collect()ed ONCE (its plan and any inline
-classifier UDF run once per report) and the Summary is aggregated from
-those rows, through a driver frame (``session.driver_frame``: Arrow, a
-``LocalRelation``) so the aggregate runs JVM tasks only and starts no
-Python worker. Layout is the reference's: one data sheet per product
-(ResponseID string-sorted, quirk K1/O1), a Summary sheet, and a chart
-sheet per product with per-question pie charts (helper blocks at columns
-50/51, 2-per-row grid, 480x320, "<question> – Sentiment Mix (n=total)").
+cap): the wide DataFrame is collect()ed ONCE, the report's one Spark job
+(its plan and any inline classifier UDF run once), and the Summary is
+counted from those rows in one Python pass, as the reference's
+build_summary_from_wide does. Layout is the reference's: one data sheet
+per product (ResponseID string-sorted, quirk K1/O1), a Summary sheet,
+and a chart sheet per product with per-question pie charts (helper
+blocks at columns 50/51, 2-per-row grid, 480x320, "<question> –
+Sentiment Mix (n=total)").
 
-When xlsxwriter is absent (it is not in this container's baked-in set),
-the sink writes a byte-real workbook through the bundled dependency-free
-OOXML writer (sinks/xlsx_writer.py) -- same sheets, widths, wrap formats,
-helper blocks, and pie-chart parts, produced by the SAME layout code. At
-100 TB the scalable path is
-``wide.write.partitionBy("Product").parquet(...)`` (write_partitioned) and
-Excel only ever receives aggregates.
+When xlsxwriter is absent, the sink writes a byte-real workbook through
+the bundled dependency-free OOXML writer (sinks/xlsx_writer.py) -- same
+sheets, widths, wrap formats, helper blocks, and pie-chart parts,
+produced by the SAME layout code. At 100 TB the scalable path is
+``wide.write.partitionBy("Product").parquet(...)`` (write_partitioned)
+and Excel only ever receives aggregates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections import Counter
+
+from pyspark.sql import DataFrame, Row
 
 from automated_review_analysis_pipeline_spark.functions.text import sanitize_sheet_name
-from automated_review_analysis_pipeline_spark.operators.reshape import summary_from_wide
-from automated_review_analysis_pipeline_spark.session import driver_frame
 from automated_review_analysis_pipeline_spark.sinks import xlsx_writer
 
 try:  # gate: not in the container's baked-in set
@@ -35,6 +34,7 @@ except Exception:
     HAVE_XLSXWRITER = False
 
 SENTIMENTS = ["Positive", "Neutral", "Negative", "Mixed"]
+SummaryRow = Row("Product", "Question", *SENTIMENTS)
 
 
 def _column_width(header: str, values: list[str], lo: int = 12, hi: int = 60) -> int:
@@ -44,6 +44,22 @@ def _column_width(header: str, values: list[str], lo: int = 12, hi: int = 60) ->
     return max(lo, min(hi, int(0.9 * longest)))
 
 
+def summary_rows(wide_rows: list, cols: list[str]) -> list[Row]:
+    """operators.reshape.summary_from_wide over collected rows: a
+    blank/missing sentiment counts as Neutral (Spark ``trim`` strips
+    spaces only), any other non-enum value is counted nowhere, and every
+    (Product, Question) group gets a 0-filled row, sorted by that pair."""
+    questions = [(i, c[: -len("_Sentiment")]) for i, c in enumerate(cols)
+                 if c.endswith("_Sentiment")]
+    counts: dict[tuple, Counter] = {}
+    for row in wide_rows:
+        for i, q in questions:
+            counts.setdefault((row["Product"], q), Counter())[
+                (row[i] or "").strip(" ") or "Neutral"] += 1
+    return [SummaryRow(*key, *(c[s] for s in SENTIMENTS))
+            for key, c in sorted(counts.items())]
+
+
 def write_excel_report(wide: DataFrame, out_path: str,
                        base_to_display: dict[str, str] | None = None) -> list[str]:
     """Write the report; returns the sheet-name inventory (tested against
@@ -51,11 +67,6 @@ def write_excel_report(wide: DataFrame, out_path: str,
     base_to_display = base_to_display or {}
     wide_rows = wide.collect()
     cols = wide.columns
-    local = driver_frame(wide.sparkSession, wide_rows, wide.schema)
-    # (Product, Question) order matches the golden workbook's Summary sheet
-    summary_rows = sorted(summary_from_wide(local).collect(),
-                          key=lambda r: (r["Product"], r["Question"]))
-
     per_product = {
         p: sorted(
             (r for r in wide_rows if r["Product"] == p),
@@ -64,8 +75,8 @@ def write_excel_report(wide: DataFrame, out_path: str,
         for p in sorted({r["Product"] for r in wide_rows})
     }
 
-    return _write_xlsx(out_path, cols, per_product, summary_rows,
-                       base_to_display)
+    return _write_xlsx(out_path, cols, per_product,
+                       summary_rows(wide_rows, cols), base_to_display)
 
 
 def _write_xlsx(out_path: str, cols, per_product, summary_rows,

@@ -237,6 +237,40 @@ def test_excel_sink_inventory(spark, tmp_path):
     assert len(sheets) == 5
 
 
+def test_excel_summary_matches_summary_from_wide(spark):
+    """The sink counts the Summary from the collected wide rows; it must
+    equal the Spark operator registry queries use: blank, space-padded
+    and None sentiments (Spark trim strips spaces only, so a tab stays),
+    a value outside the enum, several products, and no rows at all."""
+    from automated_review_analysis_pipeline_spark.operators.reshape import (
+        summary_from_wide,
+    )
+    from automated_review_analysis_pipeline_spark.sinks.excel import (
+        summary_rows,
+    )
+
+    schema = ("ResponseID string, Product string, Q1_Answer string, "
+              "Q1_Sentiment string, Q2_Answer string, Q2_Sentiment string")
+    rows = [("1", "P1", "a", "", "b", "  Positive  "),
+            ("1", "P2", "a", "", "b", "  Positive  "),
+            ("2", "P1", "c", "\tNegative", "d", None),
+            ("3", "P2", "e", "Great", "f", "Mixed"),
+            ("4", "P3", "g", "   ", "h", "Negative"),
+            ("5", "P3", "i", "Positive", "j", "Elated"),
+            ("6", "P4", "k", "Great", "l", "Elated")]
+    for data in (rows, []):
+        wide = spark.createDataFrame(data, schema)
+        got = summary_rows(wide.collect(), wide.columns)
+        assert got == sorted(summary_from_wide(wide).collect())
+        assert len(got) == (8 if data else 0)
+    # _write_xlsx reads the rows by position and by name
+    first = summary_rows(spark.createDataFrame(rows, schema).collect(),
+                         wide.columns)[0]
+    assert (first[0], first["Product"], first["Question"]) == \
+        ("P1", "P1", "Q1")
+    assert tuple(first) == ("P1", "Q1", 0, 1, 0, 0)
+
+
 def test_empty_survey_guard(spark):
     """R4: zero input rows -> empty wide frame with the full schema."""
     survey = spark.createDataFrame(

@@ -15,6 +15,7 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
+import pytest
 from pyspark.sql.functions import pandas_udf
 
 from automated_review_analysis_pipeline_spark.operators.cache import load_cache
@@ -305,3 +306,20 @@ def test_driver_form_matches_column_form(spark, tmp_path, capsys):
     assert "1 of 3 keys fell back" in capsys.readouterr().err
     cached = {r["answer"] for r in load_cache(spark, cache).collect()}
     assert cached == {"retry me", "always down", long_answer}
+
+
+def test_llm_kernel_builds_its_udf_on_first_column_call(monkeypatch):
+    """Building the kernel and running its driver form build no pandas
+    UDF, so neither needs a SparkContext; only a Column call does."""
+    from automated_review_analysis_pipeline_spark.operators import classify
+
+    def no_udf(*args, **kwargs):
+        raise AssertionError("pandas_udf called")
+
+    monkeypatch.setattr(classify, "pandas_udf", no_udf)
+    kernel = llm_kernel("retail", client_factory=_make_factory(),
+                        base_delay=0.001)
+    assert kernel.classify_batch([("Q1", "love it"), ("Q1", "n/a")], 2) == \
+        [("Positive", "Fit Praise"), ("Neutral", "No Feedback")]
+    with pytest.raises(AssertionError, match="pandas_udf called"):
+        kernel(None, None)
