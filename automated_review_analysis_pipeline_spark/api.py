@@ -88,8 +88,10 @@ def run(
     migrated reference .analysis_cache.json (import_json_cache)
     short-circuits every classification it already paid for.
     ``max_parallelism`` bounds API-mode concurrency (requests in flight
-    from the driver); ``cache=None`` classifies inline (the reference
-    with caching disabled)."""
+    from the driver). ``cache=None`` keeps only the reference's per-run
+    dict: each distinct non-filler key is classified once and nothing is
+    read or written (the LLM kernel sends those requests from the driver;
+    a column kernel classifies inline in the plan)."""
     from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
         analyze_wide_cached,
     )

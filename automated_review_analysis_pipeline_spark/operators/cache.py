@@ -10,9 +10,10 @@ distinct). Catalyst will never dedup UDF inputs on its own, so
 :func:`classify_with_cache` reproduces the effect with ONE Spark action:
 
     cache dir --pyarrow--> dict               one row per key, last write wins
+                                              (no cache: an empty dict)
     collect(distinct(keys)), probe the dict   hit = a key in the dict
     misses --classifier--> values             (API kernel: from the driver)
-    misses + values --> one file --> cache dir
+    misses + values --> one file --> cache dir  (no cache: no file)
     hits + misses --> driver frame            = the result
 
 The cache lives on a local filesystem (os.replace, pq.write_table), so
@@ -21,14 +22,14 @@ it. The result, the broadcast side of every join back, is a
 :func:`..session.driver_frame` (Arrow, a ``LocalRelation``), collected
 and broadcast with no Spark job and no Python worker.
 
-The classifier is the survey plans' column contract,
-``classifier(question: Column, answer: Column) -> struct<sentiment,
-category>``, applied once to the miss set with the question as a column:
-one bulk pass over the distinct texts of every question. A kernel may
-also carry a driver form, ``classify_batch(pairs, max_parallelism)``
-(the API kernel, operators/classify.llm_kernel): I/O-bound requests go
-out from driver threads, so the cached API path starts no Python worker
-either.
+A kernel has one of two forms. A column kernel follows the survey
+plans' column contract, ``classifier(question: Column, answer: Column)
+-> struct<sentiment, category>``, applied once to the miss set with the
+question as a column: one bulk pass over the distinct texts of every
+question. The API kernel (operators/classify.llm_kernel) carries a
+driver form instead, ``classify_batch(pairs, max_parallelism)``:
+I/O-bound requests go out from driver threads, so an API report starts
+no Python worker either, with a cache or without one.
 
 Idempotence comes free: a re-run finds every key in the cache,
 classifies zero rows and appends nothing (the reference needed
@@ -59,7 +60,8 @@ KEY_COLS = ["industry", "question", "answer"]
 VAL_COLS = ["sentiment", "category"]
 ARROW_SCHEMA = pa.schema([(c, pa.string()) for c in KEY_COLS + VAL_COLS])
 
-# classifier(question, answer) -> struct<sentiment string, category string>
+# classifier(question, answer) -> struct<sentiment string, category string>;
+# the API kernel instead carries classify_batch(pairs, max_parallelism)
 Classifier = Callable[[Column, Column], Column]
 
 
@@ -255,37 +257,24 @@ def classify_with_cache(
     extending the cache table. Returns KEY_COLS + VAL_COLS for every input
     key. ``keys`` may contain duplicates; they are collapsed first.
 
-    With ``cache_path``, one collect returns the distinct keys and each
-    is probed in read_cache's dict: hit or miss. Only misses are
-    classified, none on a warm run. A kernel with a driver form
+    One collect returns the distinct keys and each is probed in
+    read_cache's dict: hit or miss. Without ``cache_path`` the dict is an
+    empty, run-scoped one (the reference's in-memory dict with nothing
+    loaded), so every key is a miss and no file is written. Only misses
+    are classified, none on a warm run. A kernel with a driver form
     (``classifier.classify_batch``, the API kernel) sends their requests
     from the driver, at most ``max_parallelism`` in flight (default: the
-    session's default parallelism); any other kernel classifies them in
-    one more action, over a driver frame of the misses. The misses are
-    appended as one parquet file (none if every key hits); the result is
-    a driver frame over the rows. Without ``cache_path`` every distinct
-    key is classified lazily in the returned plan.
-
-    In a plan, ``max_parallelism`` is the miss set's partition count
-    before the classifier, so a UDF kernel runs at most that many
-    concurrent streams (the reference's single sequential loop,
+    session's default parallelism); a column kernel classifies them in
+    one more action, over a driver frame of the misses repartitioned to
+    ``max_parallelism`` partitions, so a UDF kernel runs at most that
+    many concurrent streams (the reference's single sequential loop,
     survey_analysis.py:189-217, is the rate-limit precedent --
-    ``max_parallelism=1`` reproduces it; None leaves the
-    shuffle-parallelism default)."""
-
-    def classified(misses: DataFrame) -> DataFrame:
-        if max_parallelism is not None:
-            misses = misses.repartition(max_parallelism)
-        return misses.select(
-            *KEY_COLS,
-            classifier(F.col("question"), F.col("answer")).alias("__r"),
-        ).select(*KEY_COLS, *[F.col(f"__r.{c}").alias(c) for c in VAL_COLS])
-
-    distinct_keys = keys.select(*KEY_COLS).distinct()
-    if not cache_path:
-        return classified(distinct_keys)
-    cached = read_cache(cache_path)
-    found = [tuple(r) for r in distinct_keys.collect()]
+    ``max_parallelism=1`` reproduces it; None leaves the frame's own
+    partitioning). With ``cache_path`` the misses are appended as one
+    parquet file (none if every key hits). The result is a driver frame
+    over the rows."""
+    cached = read_cache(cache_path) if cache_path else {}
+    found = [tuple(r) for r in keys.select(*KEY_COLS).distinct().collect()]
     hits = [k + cached[k] for k in found if k in cached]
     misses = [k for k in found if k not in cached]
     batch = getattr(classifier, "classify_batch", None)
@@ -294,6 +283,14 @@ def classify_with_cache(
                        or spark.sparkContext.defaultParallelism)
         misses = [r + tuple(v) for r, v in zip(misses, values)]
     elif misses:
-        misses = classified(driver_frame(spark, misses, KEY_SCHEMA)).collect()
-    _append(cache_path, misses)
+        frame = driver_frame(spark, misses, KEY_SCHEMA)
+        if max_parallelism is not None:
+            frame = frame.repartition(max_parallelism)
+        misses = frame.select(
+            *KEY_COLS,
+            classifier(F.col("question"), F.col("answer")).alias("__r"),
+        ).select(*KEY_COLS, *[F.col(f"__r.{c}").alias(c) for c in VAL_COLS]
+        ).collect()
+    if cache_path:
+        _append(cache_path, misses)
     return driver_frame(spark, hits + misses, CACHE_SCHEMA)

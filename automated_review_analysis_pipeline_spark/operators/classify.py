@@ -1,9 +1,7 @@
 """Pluggable classification kernels (reference C1, C4, C5, C6).
 
-Three interchangeable engines, same contract as the deterministic column
-kernels in functions/classify.py but running as Arrow-batched pandas UDFs
-(the slow path -- used only when the semantics genuinely need Python or an
-API call; the API kernel's cached path sends its requests from the driver):
+Three interchangeable engines, same results contract as the deterministic
+column kernels in functions/classify.py:
 
 - vader_kernel     : C1, VADER compound score with contrast-word Mixed rule
                      (survey_analysis.py:118-129); falls back to the
@@ -13,32 +11,32 @@ API call; the API kernel's cached path sends its requests from the driver):
                      exponential backoff (1s doubling, 8s cap) and the
                      (Neutral, No Feedback) failure default
                      (survey_analysis.py:171-217); prompt text preserved.
-                     Also a driver batch form (``classify_batch``) for the
-                     memo cache's misses.
-- stub_kernel      : deterministic fake with the same plumbing -- tests and
-                     demo runs exercise batching/retry paths at zero cost.
+- stub_kernel      : deterministic fake with the same plumbing as VADER --
+                     tests and demo runs exercise Arrow batching at zero
+                     cost.
 
-Every kernel is a ``classifier(question: Column, answer: Column) ->
-struct<sentiment string, category string>`` column function -- the one
-classifier contract of plans/survey_pipeline and operators/cache.
-
-Scale: Arrow batch size rides spark.sql.execution.arrow.maxRecordsPerBatch.
-API-mode concurrency is ``max_parallelism`` request threads on the driver
-(n = at most n requests in flight, the engine's replacement for the
-reference's single sequential request loop): the requests are I/O-bound,
-so executors are no help, and a pandas-UDF stage would cost a Python
-worker launch plus an Arrow round trip per report.
+The VADER and stub kernels are ``classifier(question: Column, answer:
+Column) -> struct<sentiment string, category string>`` column functions
+(Arrow-batched pandas UDFs), the column contract of
+plans/survey_pipeline and operators/cache. The LLM kernel has one form,
+a driver form: ``classify_batch(pairs, max_parallelism)`` sends one
+request per distinct (question, answer) pair from ``max_parallelism``
+driver threads (n = at most n requests in flight, the engine's
+replacement for the reference's single sequential request loop). The
+requests are I/O-bound, so executors are no help, and a pandas-UDF
+stage would cost a Python worker launch plus an Arrow round trip per
+report.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import sys
 import threading
 import time
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
 
 import pandas as pd
 from pyspark.sql import Column
@@ -51,15 +49,12 @@ from automated_review_analysis_pipeline_spark.functions.classify import (
     NEG_LEXICON,
     POS_LEXICON,
 )
-from automated_review_analysis_pipeline_spark.functions.text import FILLER_VALUES
 from automated_review_analysis_pipeline_spark.operators.cache import Classifier
-
-_FILLER = set(FILLER_VALUES)
 
 RESULT_TYPE = "sentiment string, category string"
 
-# the result of a filler answer and of a key whose every try failed
-# (survey_analysis.py:171-217, :284-285)
+# the result of a key whose every try failed (survey_analysis.py:171-217);
+# the survey plans give filler answers the same default (:284-285)
 NO_FEEDBACK = ("Neutral", "No Feedback")
 
 # C5 prompt text, byte-identical to the reference's literals
@@ -179,7 +174,7 @@ def llm_kernel(
     api_base: str | None = None,
     client_factory: Callable[[], object] | None = None,
     base_delay: float = 1.0,
-) -> Classifier:
+) -> SimpleNamespace:
     """C5+C6: LLM classification via an OpenAI-compatible endpoint.
 
     Reference-parity details (survey_analysis.py:171-217):
@@ -190,20 +185,17 @@ def llm_kernel(
     - terminal failure -> ("Neutral", "No Feedback") + stderr warning
     - empty category -> "No Feedback"
 
-    One request body, ``classify_one``, in two forms:
-
-    - ``classifier.classify_batch(pairs, max_parallelism)``, the driver
-      form: classify_with_cache sends a cache pass's misses through it.
-      A pool of ``max_parallelism`` threads, one client each, sends the
-      requests from the driver -- at most that many in flight, 1 being
-      the reference's sequential loop -- so no Python worker starts and
-      nothing crosses to Arrow. Results come back in ``pairs`` order;
-      one stderr line counts the keys that fell back to the default.
-    - the classifier itself, the Column form: one two-column pandas UDF
-      that builds a client per task. Only inline ``analyze_wide``
-      (no cache) uses it; the question rides in as a column next to the
-      answer, so one UDF serves every question. The UDF is built on the
-      first Column call, so building the kernel needs no SparkContext.
+    The kernel carries one form, the driver form
+    ``kernel.classify_batch(pairs, max_parallelism)``: classify_with_cache
+    sends every key it has to classify through it -- a cache pass's
+    misses, or every distinct key of an uncached report. A pool of
+    ``max_parallelism`` threads, one client each, sends the requests from
+    the driver -- at most that many in flight, 1 being the reference's
+    sequential loop -- so no Python worker starts, nothing crosses to
+    Arrow and building the kernel needs no SparkContext. Results come
+    back in ``pairs`` order; one stderr line counts the keys that fell
+    back to the default. Filler answers never reach it: the survey plans
+    leave them out of the keys (P3).
 
     ``client_factory`` injects an OpenAI-compatible client builder (tests
     pass a fake; production default constructs the real one). A client
@@ -222,13 +214,6 @@ def llm_kernel(
                      ) -> tuple[str, str] | None:
         """One key's classification; None when it falls back to
         NO_FEEDBACK (every try failed)."""
-        # In-kernel filler guard: the plan's when/otherwise picks the
-        # right OUTPUT for filler rows, but Spark hoists Python UDFs
-        # into an ArrowEvalPython stage that runs for ALL rows --
-        # without this check filler rows would still cost an API call
-        # (the reference's P3 saved ~17% of calls).
-        if (ans or "").strip().lower() in _FILLER:
-            return NO_FEEDBACK
         delay = base_delay
         for attempt in range(max_retries):
             try:
@@ -258,14 +243,6 @@ def llm_kernel(
                 delay = min(delay * 2, 8.0 * base_delay)
         return None
 
-    def _llm(batches: Iterator[tuple[pd.Series, pd.Series]]
-             ) -> Iterator[pd.DataFrame]:
-        client = make_client()
-        for questions, answers in batches:
-            pairs = [classify_one(client, str(q), str(a)) or NO_FEEDBACK
-                     for q, a in zip(questions, answers.fillna(""))]
-            yield pd.DataFrame(pairs, columns=["sentiment", "category"])
-
     def classify_batch(pairs: list[tuple[str, str]], max_parallelism: int
                        ) -> list[tuple[str, str]]:
         local = threading.local()
@@ -284,15 +261,4 @@ def llm_kernel(
                   file=sys.stderr)
         return [r or NO_FEEDBACK for r in results]
 
-    @functools.cache
-    def column_udf():
-        return pandas_udf(_llm, RESULT_TYPE)
-
-    def classifier(question: Column, answer: Column) -> Column:
-        return column_udf()(question, answer)
-
-    classifier.classify_batch = classify_batch
-    # P6: only API-bound text is truncated to max_chars
-    # (survey_analysis.py:264-265); the survey plans read this flag
-    classifier.truncate_input = True
-    return classifier
+    return SimpleNamespace(classify_batch=classify_batch)

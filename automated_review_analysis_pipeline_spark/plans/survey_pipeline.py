@@ -11,14 +11,18 @@ triplets into one output row per product. Here the row loop disappears:
 Rows are numbered by a window inside the plan (:func:`with_response_id`),
 so neither plan persists anything.
 
-Every classifier follows one contract, ``classifier(question: Column,
-answer: Column) -> struct<sentiment, category>``. :func:`analyze_wide`
-applies it inline per question column with ``F.lit(question)``;
+A column kernel follows the contract ``classifier(question: Column,
+answer: Column) -> struct<sentiment, category>``; :func:`analyze_wide`
+applies it inline per question column with ``F.lit(question)``.
 :func:`analyze_wide_cached` stacks the cleaned answers into one
 (industry, question, answer) key frame and hands it to
 operators/cache.classify_with_cache -- the single memo-cache
 implementation, one cache lookup -- then joins every question back to
-ONE broadcast of the results (one BroadcastExchange, Q-1 reuses).
+ONE broadcast of the results (one BroadcastExchange, Q-1 reuses). The
+API kernel has only a driver form (``classify_batch``), so every report
+it classifies goes through that pass: :func:`analyze_wide` hands it to
+:func:`analyze_wide_cached` with no cache path, the reference's
+per-run dict, and each distinct key is classified once.
 
 Plan-construction discipline:
 
@@ -34,6 +38,8 @@ Plan-construction discipline:
 """
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -99,23 +105,15 @@ def _staged_clean(survey: DataFrame, id_col: str | None):
 
 
 def _api_bound(classifier: Classifier, max_chars: int) -> Classifier:
-    """P6: a kernel that declares ``truncate_input = True`` (the API
-    kernel) sees only the first ``max_chars`` characters, like the
-    reference's ``ans_for_api = ans[:max_chars]``
-    (survey_analysis.py:264-265); the demo/VADER kernels score the full
-    cleaned answer (:263). The kernel's driver form gets the same cut:
-    ``answer[:max_chars]`` counts code points, like ``F.substring``."""
-    if not getattr(classifier, "truncate_input", False):
-        return classifier
-
-    def bounded(question: Column, answer: Column) -> Column:
-        return classifier(question, F.substring(answer, 1, max_chars))
-
+    """P6: a kernel with a driver form (the API kernel) sees only the
+    first ``max_chars`` code points of each answer, like the reference's
+    ``ans_for_api = ans[:max_chars]`` (survey_analysis.py:264-265); the
+    column kernels (demo/VADER) score the full cleaned answer (:263)."""
     batch = getattr(classifier, "classify_batch", None)
-    if batch is not None:
-        bounded.classify_batch = lambda pairs, n: batch(
-            [(q, a[:max_chars]) for q, a in pairs], n)
-    return bounded
+    if batch is None:
+        return classifier
+    return SimpleNamespace(classify_batch=lambda pairs, n: batch(
+        [(q, a[:max_chars]) for q, a in pairs], n))
 
 
 def _finalize_wide(df: DataFrame, bases: list[str],
@@ -146,20 +144,28 @@ def analyze_wide(
     the triplet {base}_Answer, {base}_Sentiment, {base}_Category in original
     question order. Row count = sum over responses of max(1, #products).
 
-    ``max_chars`` caps ONLY the text handed to classifiers that declare
-    ``truncate_input = True`` (the API kernel) -- reference P6 truncates
-    just the API-bound string (survey_analysis.py:264-265,
-    ``ans_for_api = ans[:max_chars]``) while the demo/VADER path scores
-    the full cleaned answer (:263). The emitted _Answer column is always
-    uncapped, and the cache key uses the full answer (:259).
+    A kernel with a driver form (``classify_batch``, the API kernel) is
+    handed to :func:`analyze_wide_cached` with no cache path: one collect
+    of the distinct non-filler keys, each classified once from the driver
+    (the reference's run-scoped dict, survey_analysis.py:257-273), no
+    file written. A column kernel stays inline in the plan.
+
+    ``max_chars`` caps ONLY the text handed to the API kernel --
+    reference P6 truncates just the API-bound string
+    (survey_analysis.py:264-265, ``ans_for_api = ans[:max_chars]``)
+    while the demo/VADER path scores the full cleaned answer (:263). The
+    emitted _Answer column is always uncapped, and the cache key uses
+    the full answer (:259).
     """
+    if hasattr(classifier, "classify_batch"):
+        return analyze_wide_cached(survey, classifier, "", None, id_col,
+                                   max_chars)
     df, questions, bases, products_col, base_to_display = \
         _staged_clean(survey, id_col)
 
     # Stage 2: classify from the cleaned ATTRIBUTE (not the regex expr).
-    # Filler short-circuit (P3, survey_analysis.py:284-285) skips the
-    # classifier -- with a UDF kernel this also skips the Python/API call.
-    kernel = _api_bound(classifier, max_chars)
+    # Filler short-circuit (P3, survey_analysis.py:284-285) picks the
+    # output for filler rows.
     res_cols = []
     for q, b in zip(questions, bases):
         ans = F.col(f"{b}_Answer")
@@ -167,7 +173,7 @@ def analyze_wide(
             is_filler(ans),
             F.struct(F.lit("Neutral").alias("sentiment"),
                      F.lit("No Feedback").alias("category")),
-        ).otherwise(kernel(F.lit(q), ans))
+        ).otherwise(classifier(F.lit(q), ans))
         res_cols.append(res.alias(f"__res_{b}"))
     df = df.select("*", *res_cols)
 
@@ -178,7 +184,7 @@ def analyze_wide_cached(
     survey: DataFrame,
     classifier: Classifier,
     industry: str,
-    cache_path: str,
+    cache_path: str | None,
     id_col: str | None = None,
     max_chars: int = 600,
     max_parallelism: int | None = None,
@@ -196,9 +202,12 @@ def analyze_wide_cached(
     This is the plan the CLI runs when a cache path is configured, in
     BOTH modes (the reference consults the cache before VADER too) -- a
     reference user's migrated .analysis_cache.json (import_json_cache)
-    short-circuits every already-paid classification. ``max_parallelism``
-    bounds API-mode concurrency: at most that many requests in flight
-    from the driver (default: the session's default parallelism).
+    short-circuits every already-paid classification. With no
+    ``cache_path`` the lookup is an empty run-scoped dict and nothing is
+    read or written (inline :func:`analyze_wide` with the API kernel).
+    ``max_parallelism`` bounds API-mode concurrency: at most that many
+    requests in flight from the driver (default: the session's default
+    parallelism).
 
     The results are the collected distinct-key rows, so the plan holds
     no cached relation and no reference to the cache files. Every join

@@ -626,44 +626,50 @@ def test_interrupted_append_temp_file_is_ignored(spark, tmp_path):
 
 
 def test_uncached_report_classifies_each_cell_once(spark, tmp_path):
-    """With no cache the LLM UDF stays inline in the wide plan, so the
-    report must execute that plan exactly once: one request per
-    non-filler cell, counted with executor-side marker files."""
+    """With no cache the LLM kernel's driver form classifies each
+    distinct non-filler key once (the reference's per-run dict), and the
+    report executes the wide plan once: one request per distinct key, 7
+    for INLINE_SURVEY's 9 non-filler cells. No plan the report executes
+    reads a pickled RDD or evaluates Python, so it starts no Python
+    worker."""
     from automated_review_analysis_pipeline_spark.operators.classify import (
         llm_kernel,
     )
+    from automated_review_analysis_pipeline_spark.session import driver_frame
     from automated_review_analysis_pipeline_spark.sinks.excel import (
         write_excel_report,
     )
 
-    marker = str(tmp_path / "api_calls")
-    os.makedirs(marker)
+    requests = []
 
     def factory():
-        import json as _json
-        import uuid
+        def create(**kwargs):
+            requests.append(kwargs)
+            msg = SimpleNamespace(content='{"sentiment": "Positive", '
+                                          '"category": "General"}')
+            return SimpleNamespace(choices=[SimpleNamespace(message=msg)])
 
-        class _Resp:
-            def __init__(self):
-                msg = type("M", (), {"content": _json.dumps(
-                    {"sentiment": "Positive", "category": "General"})})
-                self.choices = [type("C", (), {"message": msg})]
-
-        class _Completions:
-            def create(self, **kwargs):
-                open(os.path.join(marker, uuid.uuid4().hex), "w").close()
-                return _Resp()
-
-        return type("Client", (), {
-            "chat": type("Chat", (), {"completions": _Completions()})()})()
+        return SimpleNamespace(chat=SimpleNamespace(
+            completions=SimpleNamespace(create=create)))
 
     kernel = llm_kernel("retail", client_factory=factory, base_delay=0.001)
-    survey = spark.createDataFrame(INLINE_SURVEY, INLINE_COLUMNS)
+    survey = driver_frame(spark, INLINE_SURVEY,
+                          ", ".join(f"{c} string" for c in INLINE_COLUMNS))
+    first = _next_execution_id(spark)
     wide, b2d = analyze_wide(survey, classifier=kernel)
     sheets = write_excel_report(wide, str(tmp_path / "r.xlsx"), b2d)
     assert "Summary" in sheets
-    # 12 cells, 3 filler ("n/a", "none", "-") -> 9 requests
-    assert len(os.listdir(marker)) == 9
+    # 12 cells, 3 filler ("n/a", "none", "-") -> 9 cells, 7 distinct keys
+    assert len(requests) == 7
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    plans = [execs.apply(i).physicalPlanDescription()
+             for i in range(execs.size())
+             if execs.apply(i).executionId() >= first]
+    assert plans
+    for plan in plans:
+        assert "ExistingRDD" not in plan and "Python" not in plan, plan
 
 
 def test_cached_plan_broadcasts_results_once(spark, tmp_path):

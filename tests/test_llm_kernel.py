@@ -3,9 +3,8 @@ normalization, empty-category default, retry-with-backoff, and the
 terminal (Neutral, No Feedback) failure default -- exercised with fake
 OpenAI-compatible clients (no network, near-zero backoff).
 
-All fakes are built inside factory closures: cloudpickle ships them by
-value to the UDF workers (module-level test classes would pickle by
-reference to a module the workers cannot import).
+The kernel sends its requests from driver threads, so the fake clients
+run in the test process.
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-import pytest
 from pyspark.sql.functions import pandas_udf
 
 from automated_review_analysis_pipeline_spark.operators.cache import load_cache
@@ -126,7 +124,7 @@ def test_prompt_text_matches_reference_verbatim(spark, tmp_path):
         "chat": type("Chat", (), {"completions": _RefCompletions()})()})()
     ref_mod.call_openai_analyze(industry, question, answer, ref_client)
 
-    # -- engine side: capture what WE send (executor writes to shared fs) --
+    # -- engine side: capture what WE send --------------------------------
     capture_path = str(tmp_path / "captured.json")
 
     def factory():
@@ -197,10 +195,9 @@ def test_classify_stage_respects_max_parallelism(spark, tmp_path):
 
 
 def test_llm_kernel_filler_short_circuit_skips_api(spark, tmp_path):
-    """Filler answers never reach the client. Spark hoists the UDF into an
-    ArrowEvalPython stage that runs for ALL rows, so the cost guard lives
-    inside the kernel -- observed via executor-side marker files (local
-    mode: workers share the filesystem)."""
+    """Filler answers never reach the client: inline analyze_wide leaves
+    them out of the distinct keys it hands the kernel's driver form
+    (P3), counted with marker files."""
     marker = str(tmp_path / "api_calls")
     os.makedirs(marker)
     kernel = llm_kernel("retail",
@@ -212,7 +209,7 @@ def test_llm_kernel_filler_short_circuit_skips_api(spark, tmp_path):
     rows = {r["Q1_Answer"]: r for r in wide.collect()}
     assert rows["n/a"]["Q1_Category"] == "No Feedback"
     assert rows["a real answer"]["Q1_Category"] == "General"
-    # exactly ONE api call: the three filler rows were skipped in-kernel
+    # exactly ONE api call: the three filler rows were never keys
     assert len(os.listdir(marker)) == 1
 
 
@@ -258,12 +255,12 @@ def test_driver_form_bounds_requests_in_flight(spark):
 
 
 def test_driver_form_matches_column_form(spark, tmp_path, capsys):
-    """The driver form (analyze_wide_cached) and the Column form
-    (inline analyze_wide) give the same values for a 429-then-success
-    key, an always-failing key and an answer past max_chars with
-    non-ASCII text, which both forms cut to the same code points; the
-    cache row keeps the full answer, and the driver counts the one
-    fallback on stderr."""
+    """A cached report (analyze_wide_cached) and an uncached one (inline
+    analyze_wide, the run-scoped dict) give the same values for a
+    429-then-success key, an always-failing key and an answer past
+    max_chars with non-ASCII text, which both cut to the same code
+    points; the cache row keeps the full answer, and the driver counts
+    the one fallback on stderr."""
     long_answer = "Précis: " + "日本語のテキスト " * 3 + "ünïcödé tail"
     max_chars = 14      # cuts inside the Japanese run
 
@@ -308,9 +305,10 @@ def test_driver_form_matches_column_form(spark, tmp_path, capsys):
     assert cached == {"retry me", "always down", long_answer}
 
 
-def test_llm_kernel_builds_its_udf_on_first_column_call(monkeypatch):
-    """Building the kernel and running its driver form build no pandas
-    UDF, so neither needs a SparkContext; only a Column call does."""
+def test_llm_kernel_never_builds_a_pandas_udf(spark, monkeypatch):
+    """The LLM kernel has only its driver form: building it, running
+    classify_batch and collecting an inline analyze_wide with it build
+    no pandas UDF."""
     from automated_review_analysis_pipeline_spark.operators import classify
 
     def no_udf(*args, **kwargs):
@@ -319,7 +317,10 @@ def test_llm_kernel_builds_its_udf_on_first_column_call(monkeypatch):
     monkeypatch.setattr(classify, "pandas_udf", no_udf)
     kernel = llm_kernel("retail", client_factory=_make_factory(),
                         base_delay=0.001)
-    assert kernel.classify_batch([("Q1", "love it"), ("Q1", "n/a")], 2) == \
-        [("Positive", "Fit Praise"), ("Neutral", "No Feedback")]
-    with pytest.raises(AssertionError, match="pandas_udf called"):
-        kernel(None, None)
+    assert kernel.classify_batch([("Q1", "love it"), ("Q1", "so-so")], 2) \
+        == [("Positive", "Fit Praise"), ("Neutral", "General")]
+    wide, _ = analyze_wide(_survey(spark, ["love it", "n/a"]),
+                           classifier=kernel)
+    assert sorted((r["Q1_Sentiment"], r["Q1_Category"])
+                  for r in wide.collect()) == \
+        [("Neutral", "No Feedback"), ("Positive", "Fit Praise")]

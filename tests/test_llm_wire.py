@@ -1,7 +1,7 @@
 """C5/C6 over the REAL OpenAI SDK: a loopback HTTP server speaks the
 chat-completions wire format and llm_kernel drives the genuine `openai`
-client (1.99.9, from the reference venv) against it end-to-end inside
-the Spark UDF workers -- no recording fakes anywhere on the path.
+client (1.99.9, from the reference venv) against it end-to-end from the
+driver -- no recording fakes anywhere on the path.
 
 What this lane pins that the fake-client tests cannot:
 - the EXACT request payload on the wire equals survey_analysis.py:193-202's
@@ -18,8 +18,9 @@ Environment: the reference venv's openai/httpx/httpcore/h11/anyio/distro
 are pure Python and import fine under this interpreter; its compiled
 jiter is a macOS cp39 binary, replaced by tests/wire_shims/jiter.py
 (json.loads -- the non-streaming path never calls it); pydantic comes
-from the native environment. The factory appends those paths inside the
-UDF worker process, mirroring test_vader.py's venv-loading convention.
+from the native environment. The factory appends those paths in the
+process that builds the client, mirroring test_vader.py's venv-loading
+convention.
 """
 
 from __future__ import annotations
@@ -129,7 +130,7 @@ def wire_server():
 
 
 def _real_sdk_factory(port: int):
-    """Builds the GENUINE openai client inside the UDF worker process;
+    """Builds the GENUINE openai client in the calling process;
     the SDK's own retries are disabled so the kernel's C6 loop is the
     only retry mechanism under test."""
     ref_pkgs = REF_SITE_PACKAGES
@@ -213,7 +214,7 @@ def test_cli_api_mode_end_to_end_bills_278_wire_requests(
     `python -m ...api` with OPENAI_API_KEY set (S5 env-mode selection
     -> llm_kernel with the DEFAULT client construction -- OpenAI() from
     env, base_url via OPENAI_BASE_URL), PYTHONPATH carrying the
-    reference venv's openai SDK into the UDF workers. On the bundled
+    reference venv's openai SDK into the driver. On the bundled
     2,071-non-filler-cell survey the memo cache must collapse the wire
     traffic to EXACTLY the 278 distinct keys, every one authenticated
     and answered by the loopback server, and the cache must hold the
